@@ -1387,7 +1387,8 @@ object Queries {
   // 4096 md5 buckets) for the target slice (source='src0') vs the raw
   // pool; each raw doc scores Σ log p_target/p_raw over its grams and
   // the top-100 are kept. Per-bucket terms round to 6dp DECIMAL before
-  // the per-doc sum, so both engines agree bit-for-bit.
+  // the per-doc sum, and the exact sum rounds to 4dp before the cast to
+  // double, so both engines agree bit-for-bit.
   register(
     "aq26_importance_weights",
     """WITH toks AS (
@@ -1423,7 +1424,7 @@ object Queries {
       |  GROUP BY 1
       |)
       |SELECT doc_id, n_grams::bigint AS n_grams,
-      |       round(w::double, 4) AS weight,
+      |       round(w, 4)::double AS weight,
       |       row_number() OVER (ORDER BY w DESC, doc_id) AS rank
       |FROM scored
       |QUALIFY rank <= 100

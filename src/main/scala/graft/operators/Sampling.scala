@@ -270,7 +270,9 @@ object Sampling {
     * the bucket hash is the md5-prefix hashBucket used by every split
     * in this file, and each per-bucket log-ratio term rounds to 6dp
     * DECIMAL before the per-doc sum, so summation order cannot move
-    * the result (tq8's rule). */
+    * the result (tq8's rule), and the exact sum rounds to 4dp before
+    * the cast to double: a double rounds a …5 tie differently per
+    * engine. */
   def importanceWeights(
       docs: DataFrame,
       idCol: String,
@@ -310,7 +312,7 @@ object Sampling {
     scored
       .withColumn("rank", row_number().over(rk))
       .select(col("doc_id").as(idCol), col("n_grams"),
-        round(col("w").cast("double"), 4).as("weight"), col("rank"))
+        round(col("w"), 4).cast("double").as("weight"), col("rank"))
   }
 
   /** Deterministic proportional interleave — the global TRAINING ORDER
