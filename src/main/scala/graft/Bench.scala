@@ -41,7 +41,7 @@ object Bench {
     * bench proved the same-window re-measure insufficient: one
     * sustained loaded window poisoned an alphabetically contiguous
     * band (aq45–aq56, committed up to 7.6× steady — aq55 2.28 s vs
-    * 0.30 s RepeatBench run3) because the inline re-measure ran INSIDE
+    * 0.30 s steady-state run3) because the inline re-measure ran INSIDE
     * the window that produced the spike; min-of-two-poisoned-medians
     * is still poisoned. Temporal separation is the fix: the sweep only
     * RECORDS guard triggers, and every triggered query is re-measured
@@ -60,6 +60,29 @@ object Bench {
     fresh.map { case (n, m) =>
       n -> (if (triggered(n)) math.min(m, remeasure(n)) else m)
     }.toMap
+  }
+
+  /** Releases one run's executor and catalog state deterministically.
+    * Operators localCheckpoint intermediates, and those blocks are
+    * otherwise freed only when the ContextCleaner notices the RDD is
+    * unreachable (GC-driven). Across ~100 queries × N runs in one
+    * session the stragglers accumulate and tax late-sorted queries
+    * under memory pressure — each run (warmup included) should be
+    * billed for its own plan only. blocking: async removal would race
+    * the NEXT run's execution and bill cleanup to the wrong timer.
+    * Streaming queries additionally land results in uniquely-named
+    * memory-sink temp views (st*_out_<nanos>); each holds its rows in
+    * the driver until dropped, so across runs×queries they accumulate
+    * and tax later streaming runs (st2 measured 1.2s run1 → ~6s run3
+    * before this). */
+  private[graft] def releaseRunState(
+      spark: org.apache.spark.sql.SparkSession): Unit = {
+    spark.sharedState.cacheManager.clearCache()
+    spark.sparkContext.getPersistentRDDs.values
+      .foreach(_.unpersist(blocking = true))
+    spark.catalog.listTables().collect()
+      .filter(t => t.isTemporary && t.name.contains("_out_"))
+      .foreach(t => spark.catalog.dropTempView(t.name))
   }
 
   def main(args: Array[String]): Unit = {
@@ -106,27 +129,6 @@ object Bench {
     // still recorded (warmup_run) — compile cost is real signal about
     // plan complexity, it just must not pollute the steady-state stat.
     val warmup = sys.env.getOrElse("SPARK_GRAFT_WARMUP", "1") == "1"
-    // release per-query executor state deterministically: operators
-    // localCheckpoint intermediates, and those blocks are otherwise
-    // freed only when the ContextCleaner notices the RDD is
-    // unreachable (GC-driven). Across ~100 queries × N runs in one
-    // session the stragglers accumulate and tax late-sorted queries
-    // under memory pressure — each run (warmup included) should be
-    // billed for its own plan only. blocking: async removal would race
-    // the NEXT run's execution and bill cleanup to the wrong timer.
-    // Streaming queries additionally land results in uniquely-named
-    // memory-sink temp views (st*_out_<nanos>); each holds its rows in
-    // the driver until dropped, so across runs×queries they accumulate
-    // and tax later streaming runs (st2 measured 1.2s run1 → ~6s run3
-    // before this).
-    def releaseRunState(): Unit = {
-      spark.sharedState.cacheManager.clearCache()
-      spark.sparkContext.getPersistentRDDs.values
-        .foreach(_.unpersist(blocking = true))
-      spark.catalog.listTables().collect()
-        .filter(t => t.isTemporary && t.name.contains("_out_"))
-        .foreach(t => spark.catalog.dropTempView(t.name))
-    }
     // the committed artifact (read BEFORE this run overwrites it) is
     // the noise guard's steady-state reference; absent/fresh queries
     // simply skip the guard
@@ -152,7 +154,7 @@ object Bench {
             String.valueOf(t.getMessage).linesIterator.take(1).mkString)
         }
         val dt = (System.nanoTime() - t0) / 1e9
-        releaseRunState()
+        releaseRunState(spark)
         dt
       }
       (times, failed)
@@ -173,7 +175,7 @@ object Bench {
           false
         }
         val dt = (System.nanoTime() - t0) / 1e9
-        releaseRunState()
+        releaseRunState(spark)
         if (ok) Some(dt) else None
       }
       val (times, failed) = measure(name, fn)

@@ -134,7 +134,7 @@ private[graft] object Lineage {
     * `withoutAqe` window nothing coalesces tiny exchanges, so every
     * per-round |V|-row frame shuffles into the SESSION's partition
     * count — at local[32] that is 32 near-empty tasks per exchange per
-    * round, pure scheduling tax (the r16 Where probe measured aq44 at
+    * round, pure scheduling tax (graft.tools.Probe measured aq44 at
     * 373 tasks / 220 core-seconds and aq92 at 559 tasks for frames of
     * a few MB). Like [[Spread]], the count derives from the plan's
     * LEAF input bytes — the pre-execution statistic that is actually

@@ -221,15 +221,15 @@ object Similarity {
     * unit sphere = spherical k-means, monotone in cosine) and the
     * assignment uses the SAME cosine argmax as the probe. (On an
     * already-unit-norm corpus the earlier euclidean `model.transform`
-    * assignment coincides almost everywhere — measured identical recall
-    * in tools/ProfileIvf — but on unnormalized corpora the two metrics
-    * partition differently and the probe would look in the wrong cell.)
+    * assignment coincides almost everywhere, with the same recall —
+    * but on unnormalized corpora the two metrics partition differently
+    * and the probe would look in the wrong cell.)
     *
-    * Recall regime (measured, tools/ProfileIvf): IVF recall@k is the
-    * probability the true neighbors' cells are probed. For neighbors
-    * from near-dup FAMILIES (cosine ≥0.9 — the semantic-dedup /
-    * retrieval regime ANN exists for) the family shares a cell and
-    * recall is ~1 at any nProbe. For BACKGROUND neighbors (a uniform
+    * Recall regime (pinned by the DedupSimilaritySpec IVF recall
+    * tests): IVF recall@k is the probability the true neighbors' cells
+    * are probed. For neighbors from near-dup FAMILIES (cosine ≥0.9 —
+    * the semantic-dedup / retrieval regime ANN exists for) the family
+    * shares a cell and recall is ~1 at any nProbe. For BACKGROUND neighbors (a uniform
     * sphere's top-k sits at cosine ~0.3) no partition beats chance:
     * recall ≈ scanned fraction (nProbe/cells), information-
     * theoretically — measured 0.56-0.64 at 25-50% scan, 0.88-0.90 at

@@ -12,7 +12,7 @@ import org.apache.spark.sql.{Column, DataFrame}
   * matter how many the session has. Measured on the sf0.1 bench at
   * local[32]: aq84_poisson_bootstrap 6.9 s wall with 7 single-task
   * stages and 6.2 s of single-core compute; dq20/dq22/dq23/dq24/sq27/
-  * sq28 all the same shape (tasks ≈ stages in the Where probe).
+  * sq28 all the same shape (tasks ≈ stages in graft.tools.Probe).
   *
   * [[apply]] redistributes the rows across the session's cores BEFORE
   * the kernel — but only when the plan's leaf input is provably small:

@@ -1199,15 +1199,8 @@ class ResultStore(spark: SparkSession, root: String) {
       case None => fullRewrite()
       case Some(_) if widens => fullRewrite()
       case Some(statRows) => graft.operators.Lineage.withoutAqe(spark) {
-        import spark.implicits._
-        val keyType = stored.schema(keyCol).dataType
-        val ranges = broadcast(statRows.toSeq.toDF("file", "__kmin", "__kmax")
-          .select(col("file"),
-            col("__kmin").cast(keyType).as("__lo"),
-            col("__kmax").cast(keyType).as("__hi")))
-        val touched = source.select(col(keyCol).as("__sk"))
-          .join(ranges, col("__sk") >= col("__lo") && col("__sk") <= col("__hi"))
-          .select("file").distinct().collect().map(_.getString(0)).toSet
+        val touched = touchedFileNames(source, keyCol,
+          stored.schema(keyCol).dataType, statRows)
         val prevDir = versionDir(schema, prev)
         val oldByFile = statRows
           .map(t => t._1 -> (t._2, t._3)).toMap
@@ -1283,6 +1276,27 @@ class ResultStore(spark: SparkSession, root: String) {
     }
   }
 
+  /** Names of the data files whose key range (a stats sidecar row) can
+    * hold one of `keys`' `keyCol` values: the stats rows broadcast into
+    * a range join against the keys, which are never collected — only
+    * the distinct touched file names reach the driver. Callers run it
+    * inside [[graft.operators.Lineage.withoutAqe]]. */
+  private def touchedFileNames(
+      keys: DataFrame,
+      keyCol: String,
+      keyType: org.apache.spark.sql.types.DataType,
+      statRows: Array[(String, Option[String], Option[String])])
+      : Set[String] = {
+    import spark.implicits._
+    val ranges = broadcast(statRows.toSeq.toDF("file", "__kmin", "__kmax")
+      .select(col("file"),
+        col("__kmin").cast(keyType).as("__lo"),
+        col("__kmax").cast(keyType).as("__hi")))
+    keys.select(col(keyCol).as("__sk"))
+      .join(ranges, col("__sk") >= col("__lo") && col("__sk") <= col("__hi"))
+      .select("file").distinct().collect().map(_.getString(0)).toSet
+  }
+
   /** Zero-copy SHALLOW CLONE (the Delta `CREATE TABLE ... SHALLOW
     * CLONE` / Iceberg snapshot-ref workflow): publish `dst` as a new
     * schema whose first generation HARD-LINKS the source's committed
@@ -1352,15 +1366,8 @@ class ResultStore(spark: SparkSession, root: String) {
     val pruned = readStatsRows(schema, version, keyCol) match {
       case None => onFiles(total, total); stored
       case Some(statRows) => graft.operators.Lineage.withoutAqe(spark) {
-        import spark.implicits._
-        val keyType = stored.schema(keyCol).dataType
-        val ranges = broadcast(statRows.toSeq.toDF("file", "__kmin", "__kmax")
-          .select(col("file"),
-            col("__kmin").cast(keyType).as("__lo"),
-            col("__kmax").cast(keyType).as("__hi")))
-        val touched = keys.select(col(keyCol).as("__sk"))
-          .join(ranges, col("__sk") >= col("__lo") && col("__sk") <= col("__hi"))
-          .select("file").distinct().collect().map(_.getString(0)).toSet
+        val touched = touchedFileNames(keys, keyCol,
+          stored.schema(keyCol).dataType, statRows)
         val files = dataFiles(versionDir(schema, version))
           .filter(f => touched.contains(f.getName))
         onFiles(files.length, total)

@@ -288,7 +288,7 @@ object Registries {
         // re-aggregate + upsertPruned) read every touched file twice
         // and paid two touched-file collects + their plan analyses
         // per micro-batch — a fixed per-commit driver cost that
-        // dominates small batches (the StWhere probe attributed the
+        // dominates small batches (graft.tools.Probe attributed the
         // st16/17/18 wall to addBatch, not the engine's WALs).
         val stats = store.mergeAdditivePruned(schema, delta, "key",
           groupCols, statCols, registryPartitions, meta = txns)

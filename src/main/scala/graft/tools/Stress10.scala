@@ -878,24 +878,14 @@ object Stress10 {
       spark: org.apache.spark.sql.SparkSession): Unit = {
     val sfDir = "/root/testdata/sf0.01"
     Tables.load(spark, sfDir, "region").groupBy("r_name").count().count()
-    // the bench's deterministic per-run release (cache, persisted
-    // RDDs, streaming memory sinks) — the stress must match the
-    // driver sweep's hygiene, or it measures leaked-by-the-harness
-    // state instead of leaked-by-the-operators state
-    def release(): Unit = {
-      spark.sharedState.cacheManager.clearCache()
-      spark.sparkContext.getPersistentRDDs.values
-        .foreach(_.unpersist(blocking = true))
-      spark.catalog.listTables().collect()
-        .filter(t => t.isTemporary && t.name.contains("_out_"))
-        .foreach(t => spark.catalog.dropTempView(t.name))
-    }
+    // every run releases its state as the bench does, or the stress
+    // measures state leaked by the harness instead of by the operators
     def med3(name: String): Double = {
       val ts = (1 to 3).map { _ =>
         val t0 = System.nanoTime()
         graft.SparkEntry.queries(name)(spark, sfDir).count()
         val dt = (System.nanoTime() - t0) / 1e9
-        release()
+        graft.Bench.releaseRunState(spark)
         dt
       }.sorted
       ts(1)
@@ -906,7 +896,7 @@ object Stress10 {
       try { fn(spark, sfDir).count() }
       catch { case t: Throwable =>
         println(s"STRESS10 r15 sweep $n FAILED ${t.getClass.getName}") }
-      release()
+      graft.Bench.releaseRunState(spark)
     }
     println(f"STRESS10 r15 full-sweep pass " +
       f"${(System.nanoTime() - t0) / 1e9}%.0f s " +
@@ -1036,16 +1026,6 @@ object Stress10 {
           tasks.incrementAndGet(); ()
         }
       })
-    // the bench's deterministic per-run release — identical hygiene,
-    // or this measures harness leaks instead of session-state leaks
-    def release(): Unit = {
-      spark.sharedState.cacheManager.clearCache()
-      spark.sparkContext.getPersistentRDDs.values
-        .foreach(_.unpersist(blocking = true))
-      spark.catalog.listTables().collect()
-        .filter(t => t.isTemporary && t.name.contains("_out_"))
-        .foreach(t => spark.catalog.dropTempView(t.name))
-    }
     def heapMb: Long = {
       val r = Runtime.getRuntime
       (r.totalMemory - r.freeMemory) / (1 << 20)
@@ -1053,7 +1033,8 @@ object Stress10 {
     def snapshot: String =
       f"sqlexec=${spark.sharedState.statusStore.executionsCount()}%d " +
         f"heapMB=$heapMb%d jobs=${jobs.get}%d tasks=${tasks.get}%d"
-    // warmup + 3 timed runs of one query, instrumented per run
+    // warmup + 3 timed runs of one query, instrumented per run, each
+    // releasing its state as the bench does (see r15SweepTailStress)
     def measured(name: String, tag: String): Seq[Double] = {
       val fn = graft.SparkEntry.queries(name)
       (0 to 3).map { i =>
@@ -1061,7 +1042,7 @@ object Stress10 {
         val n0 = System.nanoTime()
         fn(spark, sfDir).count()
         val dt = (System.nanoTime() - n0) / 1e9
-        release()
+        graft.Bench.releaseRunState(spark)
         println(f"STRESS10 r16 $tag $name run$i $dt%.2f s " +
           f"jobs+${jobs.get - j0} tasks+${tasks.get - t0} " + snapshot +
           (if (i == 0) " (warmup)" else ""))
@@ -1081,7 +1062,7 @@ object Stress10 {
         catch { case t: Throwable =>
           println(s"STRESS10 r16 sweep $n FAILED ${t.getClass.getName}")
         }
-        release()
+        graft.Bench.releaseRunState(spark)
       }
       if ((i + 1) % 50 == 0)
         println(s"STRESS10 r16 sweep ${i + 1}/${all.size} " + snapshot)

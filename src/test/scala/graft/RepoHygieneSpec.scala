@@ -91,4 +91,33 @@ class RepoHygieneSpec extends AnyFunSuite {
         "refresh bench_results.json (runMain graft.Bench) in the same " +
         "change that edits the registry")
   }
+
+  /** Dev mains multiplied unseen once before: four probes each with
+    * its own session, listener and state release, and five hand-copied
+    * stage profilers, none of them documented. Every object with a
+    * `def main` under src/main/scala must be listed, fully qualified,
+    * in README's "Build & test" block. */
+  test("every main object is listed in README's Build & test block") {
+    val readme = new String(java.nio.file.Files.readAllBytes(
+      java.nio.file.Paths.get("README.md")), "UTF-8")
+    val from = readme.indexOf("## Build & test")
+    assert(from >= 0, "README has no Build & test section")
+    val open = readme.indexOf("```", from)
+    val block = readme.slice(open, readme.indexOf("```", open + 3))
+    val mains = mainSources.flatMap { path =>
+      val text = new String(java.nio.file.Files.readAllBytes(path), "UTF-8")
+      val pkg = "(?m)^package ([\\w.]+)".r.findFirstMatchIn(text)
+        .map(_.group(1) + ".").getOrElse("")
+      val objects = "\\bobject (\\w+)".r.findAllMatchIn(text)
+        .map(m => m.start -> m.group(1)).toSeq
+      "\\bdef main\\(".r.findAllMatchIn(text).map { m =>
+        pkg + objects.filter(_._1 < m.start).last._2
+      }.toSeq
+    }.distinct.sorted
+    assert(mains.nonEmpty)
+    val missing = mains.filterNot(m => block.contains(s"runMain $m"))
+    assert(missing.isEmpty,
+      "main objects missing from README's Build & test block: " +
+        missing.mkString(", "))
+  }
 }
