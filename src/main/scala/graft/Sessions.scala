@@ -67,6 +67,17 @@ object Sessions {
     // 0 without isolation). graft adds no per-session jars or files, so
     // there is nothing to isolate. Only takes effect at session creation.
     .config("spark.sql.artifact.isolation.enabled", "false")
+    // Without Hadoop's native library the local file system forks a
+    // `chmod` after every file create and mkdir and a `readlink` for
+    // every rename through FileContext (the streaming checkpoint
+    // manager): an 8-round registry_ingest benchmark run forked 2,520
+    // processes, 24 with these set. graft's subclasses do both through
+    // java.nio. Hadoop caches the FileSystem per scheme, so these only
+    // take effect when set before the JVM's first local FileSystem.
+    .config("spark.hadoop.fs.file.impl",
+      classOf[graft.sources.NioLocalFileSystem].getName)
+    .config("spark.hadoop.fs.AbstractFileSystem.file.impl",
+      classOf[graft.sources.NioLocalFs].getName)
 
   def local(cpus: String, appName: String): SparkSession = {
     val s = tune(SparkSession.builder()

@@ -6,7 +6,9 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   *
   * Every table is a single parquet file under `sfDir`; reads go through
   * `spark.read.parquet` so Catalyst handles column pruning + predicate
-  * pushdown into the scan. At cluster scale the same call reads a
+  * pushdown into the scan, with the schema taken from the file's footer
+  * on the driver ([[graft.sources.ParquetFooters.scan]]) instead of a
+  * schema-inference job. At cluster scale the same call reads a
   * directory of many files — nothing here assumes a single file.
   */
 object Tables {
@@ -49,7 +51,7 @@ object Tables {
     }
 
   def load(spark: SparkSession, sfDir: String, name: String): DataFrame =
-    normalizeTs(spark.read.parquet(s"$sfDir/$name.parquet"))
+    normalizeTs(graft.sources.ParquetFooters.scan(spark, s"$sfDir/$name.parquet"))
 
   /** Register all tables as temp views so spark.sql(...) mirrors the
     * DuckDB oracle's table naming. */

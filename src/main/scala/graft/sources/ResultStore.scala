@@ -249,7 +249,7 @@ class ResultStore(spark: SparkSession, root: String) {
   def readVersion(schema: String, version: String): DataFrame = {
     val dir = new java.io.File(schemaDir(schema), version)
     require(dir.isDirectory, s"no such version '$version' for '$schema'")
-    spark.read.parquet(dir.toString)
+    ParquetFooters.scan(spark, dir.toString)
   }
 
   /** RESTORE: atomically flip the pointer back to the retained previous
@@ -770,7 +770,10 @@ class ResultStore(spark: SparkSession, root: String) {
       .unionByName(a.exceptAll(b).withColumn("op", lit("delete")))
   }
 
-  def read(schema: String): DataFrame = spark.read.parquet(dataPath(schema))
+  /** The committed table. Its schema comes from one data file's footer,
+    * read on the driver ([[ParquetFooters.scan]]), so taking the handle
+    * runs no Spark job. */
+  def read(schema: String): DataFrame = ParquetFooters.scan(spark, dataPath(schema))
 
   def exists(schema: String, keyCol: String, key: Any): Boolean =
     exists0(schema) && !read(schema).filter(col(keyCol) === lit(key)).isEmpty
@@ -911,37 +914,33 @@ class ResultStore(spark: SparkSession, root: String) {
     val conf = spark.sessionState.newHadoopConf()
     try {
       Some(dataFiles(new java.io.File(dir)).flatMap { f =>
-        val reader = org.apache.parquet.hadoop.ParquetFileReader.open(
-          org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(
-            new org.apache.hadoop.fs.Path(f.getPath), conf))
-        try {
-          val blocks = reader.getFooter.getBlocks.asScala.toSeq
-          val rowCount = blocks.map(_.getRowCount).sum
-          if (rowCount == 0) None
+        val blocks = ParquetFooters.footer(
+          new org.apache.hadoop.fs.Path(f.getPath), conf).getBlocks.asScala.toSeq
+        val rowCount = blocks.map(_.getRowCount).sum
+        if (rowCount == 0) None
+        else {
+          val stats = blocks.map(b => b.getColumns.asScala
+            .find(_.getPath.toDotString == keyCol)
+            .map(_.getStatistics).getOrElse(throw Unusable))
+          if (stats.exists(s => s == null || s.isEmpty)) throw Unusable
+          val nulls = stats.map(_.getNumNulls)
+          if (nulls.exists(_ < 0)) throw Unusable
+          if (nulls.sum == rowCount) Some((f.getName, None, None))
           else {
-            val stats = blocks.map(b => b.getColumns.asScala
-              .find(_.getPath.toDotString == keyCol)
-              .map(_.getStatistics).getOrElse(throw Unusable))
-            if (stats.exists(s => s == null || s.isEmpty)) throw Unusable
-            val nulls = stats.map(_.getNumNulls)
-            if (nulls.exists(_ < 0)) throw Unusable
-            if (nulls.sum == rowCount) Some((f.getName, None, None))
-            else {
-              val nonNull = stats.filter(_.hasNonNullValue)
-              if (nonNull.isEmpty) throw Unusable
-              val ord = Ordering.comparatorToOrdering(
-                nonNull.head.comparator()
-                  .asInstanceOf[java.util.Comparator[AnyRef]])
-              def str(v: AnyRef): String = v match {
-                case b: org.apache.parquet.io.api.Binary => b.toStringUsingUTF8
-                case o => o.toString
-              }
-              val lo = nonNull.map(_.genericGetMin.asInstanceOf[AnyRef]).min(ord)
-              val hi = nonNull.map(_.genericGetMax.asInstanceOf[AnyRef]).max(ord)
-              Some((f.getName, Some(str(lo)), Some(str(hi))))
+            val nonNull = stats.filter(_.hasNonNullValue)
+            if (nonNull.isEmpty) throw Unusable
+            val ord = Ordering.comparatorToOrdering(
+              nonNull.head.comparator()
+                .asInstanceOf[java.util.Comparator[AnyRef]])
+            def str(v: AnyRef): String = v match {
+              case b: org.apache.parquet.io.api.Binary => b.toStringUsingUTF8
+              case o => o.toString
             }
+            val lo = nonNull.map(_.genericGetMin.asInstanceOf[AnyRef]).min(ord)
+            val hi = nonNull.map(_.genericGetMax.asInstanceOf[AnyRef]).max(ord)
+            Some((f.getName, Some(str(lo)), Some(str(hi))))
           }
-        } finally reader.close()
+        }
       })
     } catch {
       case Unusable => None
@@ -1060,9 +1059,10 @@ class ResultStore(spark: SparkSession, root: String) {
 
   /** MERGE INTO with file pruning: same semantics and same atomicity
     * as [[merge]], table-rewrite cost proportional to the touched key
-    * ranges. Prune logic is scale-shaped: the manifest (one row per
-    * data file) broadcasts into a range join against the source keys —
-    * the source is never collected, and the only driver-side
+    * ranges. Prune logic is scale-shaped: the manifest (one key range
+    * per data file) rides the source-key scan as a literal and each key
+    * is tested against it in the job that computes the keys — the
+    * source is never collected, and the only driver-side
     * materialization is the touched-file list, bounded by the file
     * count like every manifest operation. Write the initial table
     * range-partitioned on the key (`repartitionByRange`) so file key
@@ -1277,9 +1277,15 @@ class ResultStore(spark: SparkSession, root: String) {
   }
 
   /** Names of the data files whose key range (a stats sidecar row) can
-    * hold one of `keys`' `keyCol` values: the stats rows broadcast into
-    * a range join against the keys, which are never collected — only
-    * the distinct touched file names reach the driver. Callers run it
+    * hold one of `keys`' `keyCol` values. The ranges ride the plan as
+    * one literal array of `(file index, lo, hi)` typed as the key; each
+    * key explodes against it and keeps the ranges that contain it. That
+    * runs inside the one job that computes the keys (a broadcast of the
+    * manifest cost a job of its own to collect its `LocalTableScan`),
+    * the keys are never collected, and only the distinct touched file
+    * indexes reach the driver. Files with a null range (all-null keys)
+    * never match. The literal is a reference object in the generated
+    * code, so a new manifest compiles no new class. Callers run it
     * inside [[graft.operators.Lineage.withoutAqe]]. */
   private def touchedFileNames(
       keys: DataFrame,
@@ -1287,14 +1293,18 @@ class ResultStore(spark: SparkSession, root: String) {
       keyType: org.apache.spark.sql.types.DataType,
       statRows: Array[(String, Option[String], Option[String])])
       : Set[String] = {
-    import spark.implicits._
-    val ranges = broadcast(statRows.toSeq.toDF("file", "__kmin", "__kmax")
-      .select(col("file"),
-        col("__kmin").cast(keyType).as("__lo"),
-        col("__kmax").cast(keyType).as("__hi")))
-    keys.select(col(keyCol).as("__sk"))
-      .join(ranges, col("__sk") >= col("__lo") && col("__sk") <= col("__hi"))
-      .select("file").distinct().collect().map(_.getString(0)).toSet
+    import org.apache.spark.sql.types._
+    val ranges = statRows.toSeq.zipWithIndex.collect {
+      case ((_, Some(lo), Some(hi)), i) => (i, lo, hi)
+    }
+    if (ranges.isEmpty) return Set.empty
+    val rangeType = ArrayType(new StructType()
+      .add("i", IntegerType).add("lo", keyType).add("hi", keyType))
+    keys.select(col(keyCol).as("__sk"),
+        explode(typedLit(ranges).cast(rangeType)).as("__r"))
+      .filter(col("__sk").between(col("__r.lo"), col("__r.hi")))
+      .select(col("__r.i")).distinct().collect()
+      .map(r => statRows(r.getInt(0))._1).toSet
   }
 
   /** Zero-copy SHALLOW CLONE (the Delta `CREATE TABLE ... SHALLOW

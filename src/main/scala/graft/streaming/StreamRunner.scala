@@ -25,9 +25,11 @@ import graft.core.Pipeline
 object StreamRunner {
 
   /** File-source stream over a directory of parquet (schema pinned from a
-    * batch peek — required by readStream). `maxFilesPerTrigger` bounds
-    * micro-batch size, the analog of the reference's chunked file
-    * ingestion (nexus/default_batch_processors.py:28-54). A `ts` column
+    * driver-side footer read, [[graft.sources.ParquetFooters.schemaOf]],
+    * else from a batch peek — readStream requires one).
+    * `maxFilesPerTrigger` bounds micro-batch size, the analog of the
+    * reference's chunked file ingestion
+    * (nexus/default_batch_processors.py:28-54). A `ts` column
     * is normalized to micros TimestampType ([[graft.Tables.normalizeTs]])
     * so stream-side event-time logic sees the same canonical type as
     * batch scans, whatever the writer encoded. */
@@ -35,7 +37,8 @@ object StreamRunner {
       spark: SparkSession,
       path: String,
       maxFilesPerTrigger: Int = 1): DataFrame = {
-    val schema = spark.read.parquet(path).schema
+    val schema = graft.sources.ParquetFooters.schemaOf(spark, path)
+      .getOrElse(spark.read.parquet(path).schema)
     // FileStreamSource force-sets basePath to the path itself when it is
     // not a glob — which errors on a single FILE path (the testdata
     // layout). An exact-match glob ([x] character class on the last

@@ -1,6 +1,7 @@
 package org.apache.spark.sql
 
 import org.apache.spark.sql.catalyst.expressions.Expression
+import org.apache.spark.sql.types.StructType
 
 /** Bridge to the sql-package-private Column ↔ Expression converters.
   *
@@ -9,6 +10,9 @@ import org.apache.spark.sql.catalyst.expressions.Expression
   * .VectorExpressions) still needs the two conversions every built-in
   * function uses internally. This shim lives in the org.apache.spark.sql
   * package purely to re-export them — no Spark behavior is modified.
+  * It also re-exports `StructType.asNullable` (`private[spark]`), the
+  * nullability Spark gives every file-source schema it infers
+  * ([[graft.sources.ParquetFooters]]).
   */
 object GraftSqlBridge {
   def toColumn(e: Expression): Column =
@@ -16,4 +20,6 @@ object GraftSqlBridge {
 
   def toExpression(c: Column): Expression =
     classic.ExpressionUtils.expression(c)
+
+  def asNullable(s: StructType): StructType = s.asNullable
 }

@@ -1,0 +1,133 @@
+package graft.sources
+
+import java.nio.file.{Files, Path, StandardCopyOption}
+import java.util.concurrent.atomic.AtomicInteger
+
+import scala.collection.mutable
+
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+import org.scalatest.funsuite.AnyFunSuite
+
+import graft.{SparkTestSession, Tables}
+import graft.operators.Dedup
+import graft.streaming.{Registries, StreamRunner}
+
+/** The fixed Spark-job cost of registry commits and store reads. Taking
+  * a store, table or stream handle learns its schema from a footer on
+  * the driver (no inference job), and a pruned commit finds its touched
+  * files inside the job that computes the batch's keys (no broadcast
+  * job). Which files a commit rewrites, carries or opens is unchanged. */
+class CommitJobsSpec extends AnyFunSuite {
+  lazy val spark = SparkTestSession.spark
+  import spark.implicits._
+  private val sf = "/root/testdata/sf0.001"
+
+  /** Jobs started while `body` runs. Every job start is on the listener
+    * bus when `body` returns; the bus is drained before counting
+    * (`listenerBus` is package-private to Spark, hence the reflection). */
+  private def jobsOf(body: => Unit): Int = {
+    val n = new AtomicInteger
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit = n.incrementAndGet()
+    }
+    val sc = spark.sparkContext
+    sc.addSparkListener(listener)
+    try {
+      body
+      val bus = sc.getClass.getMethod("listenerBus").invoke(sc)
+      bus.getClass.getMethod("waitUntilEmpty").invoke(bus)
+    } finally sc.removeSparkListener(listener)
+    n.get
+  }
+
+  /** Batch 0 seeds the registries with 64 documents over three sources;
+    * every later batch `i` holds three documents of one source, one of
+    * them an exact copy of a seed document, so a commit touches a few of
+    * the registry's files and carries the rest. */
+  private val seedTexts = {
+    val rnd = new scala.util.Random(7)
+    (0 until 64).map(_ => Seq.fill(12)(s"w${rnd.nextInt(60)}").mkString(" "))
+  }
+  private def batch(i: Int) = {
+    val sources = Seq("web", "book", "wiki")
+    val docs =
+      if (i == 0) seedTexts.indices.map(j => (j.toLong, sources(j % 3), seedTexts(j)))
+      else (0 until 3).map { j =>
+        val text = if (j == 0) seedTexts(i * 7 % 64) else s"late doc $i $j unique text"
+        (i * 100L + j, sources(i % 3), text)
+      }
+    docs.toDF("doc_id", "source", "text")
+  }
+
+  /** Lands batch `i` in `in` as one parquet file, written aside and moved
+    * in, as a producer would. */
+  private def land(tmp: Path, in: Path, i: Int): Unit = {
+    val staged = tmp.resolve(s"staged$i").toString
+    batch(i).coalesce(1).write.parquet(staged)
+    val part = new java.io.File(staged).listFiles()
+      .find(_.getName.endsWith(".parquet")).get
+    Files.move(part.toPath, in.resolve(f"batch$i%02d.parquet"),
+      StandardCopyOption.ATOMIC_MOVE)
+  }
+
+  test("taking a store, table or stream handle starts no job") {
+    val tmp = Files.createTempDirectory("graft-nojob")
+    val store = new ResultStore(spark, s"$tmp/store")
+    store.overwrite("t", Seq((1L, "a"), (2L, "b")).toDF("k", "v"))
+    assert(jobsOf(store.read("t")) == 0)
+    assert(jobsOf(store.readVersion("t", store.committedVersion("t").get)) == 0)
+    Tables.names.foreach(n => assert(jobsOf(Tables.load(spark, sf, n)) == 0, n))
+    assert(jobsOf(StreamRunner.parquetStream(spark, s"$sf/events.parquet")) == 0)
+    val in = Files.createDirectory(tmp.resolve("in"))
+    land(tmp, in, 0)
+    assert(jobsOf(StreamRunner.parquetStream(spark, in.toString)) == 0)
+  }
+
+  test("a one-file refresh of the source-stats and near-dup registries: " +
+      "job counts, and the files each commit rewrites, carries and opens") {
+    val tmp = Files.createTempDirectory("graft-commit-jobs")
+    val in = Files.createDirectory(tmp.resolve("in"))
+    val store = new ResultStore(spark, s"$tmp/store")
+    val commits = mutable.ArrayBuffer.empty[(String, Int, Int)]
+    val reads = mutable.ArrayBuffer.empty[(Int, Int)]
+    def receipt(schema: String, c: PrunedCommit): Unit = commits.synchronized {
+      commits += ((schema, c.rewrittenFiles, c.carriedFiles))
+    }
+    def stats(): Unit = Registries.incrementalSourceStats(
+      StreamRunner.parquetStream(spark, in.toString, 1), "source", "text",
+      store, "stats", "stats", s"$tmp/ckpt/stats", onCommit = receipt)
+      .awaitTermination()
+    def nearDup(): Unit = Dedup.incrementalNearDup(
+      StreamRunner.parquetStream(spark, in.toString, 1), "doc_id", "text",
+      store, "sigs", "pairs", s"$tmp/ckpt/neardup", onCommit = receipt,
+      onPrunedRead = (o, t) => reads.synchronized { reads += ((o, t)) })
+      .awaitTermination()
+    // two warm-up refreshes: the first commit of each registry, then the
+    // first pruned one
+    (0 until 2).foreach { i => land(tmp, in, i); stats(); nearDup() }
+    val jobs = (2 until 5).map { i =>
+      land(tmp, in, i)
+      (jobsOf(stats()), jobsOf(nearDup()))
+    }
+    // with a schema-inference job per store read and a broadcast job
+    // per touched-file lookup these were 5 and 16
+    jobs.foreach { case (s, n) =>
+      assert(s <= 3, s"source-stats refresh jobs per batch: $jobs")
+      assert(n <= 10, s"near-dup refresh jobs per batch: $jobs")
+    }
+    // the counts the broadcast-join implementation produced on this
+    // corpus: (schema, rewritten, carried) per commit, and (opened,
+    // total) per near-dup candidate lookup
+    assert((commits.toSeq, reads.toSeq) == ((Seq(
+      ("stats", 0, 0), ("pairs", 0, 0), ("sigs", 0, 0),
+      ("stats", 1, 2), ("pairs", 1, 0), ("sigs", 4, 4),
+      ("stats", 1, 2), ("pairs", 0, 1), ("sigs", 4, 4),
+      ("stats", 1, 2), ("pairs", 0, 2), ("sigs", 3, 5),
+      ("stats", 1, 2), ("pairs", 0, 3), ("sigs", 4, 4)),
+      Seq((4, 8), (4, 8), (3, 8), (4, 8)))),
+      s"jobs $jobs commits $commits reads $reads")
+    assert(store.read("stats").as[(String, Long, Long, Long)].collect()
+      .map(r => r._1 -> r._2).toMap ==
+      Map("web" -> 25L, "book" -> 27L, "wiki" -> 24L))
+  }
+}
