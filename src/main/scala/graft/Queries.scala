@@ -4855,9 +4855,8 @@ object Queries {
       .select("c_custkey", "c_acctbal", "c_mktsegment")
     // the CDC marker column is part of the table shape from the start,
     // so the merge below is same-schema and the pruned path engages
-    store.mergePruned("cust",
-      cust.withColumn("del", lit(false))
-        .repartitionByRange(8, col("c_custkey")), "c_custkey")
+    store.prunedMerge("cust", cust.withColumn("del", lit(false)),
+      "c_custkey", graft.sources.Combine.Replace(), initialFiles = 8)
     val src = cust.filter(col("c_custkey") % 97 === 0)
       .select(col("c_custkey"), (-col("c_acctbal")).as("c_acctbal"),
         lit("UPDATED").as("c_mktsegment"),
@@ -4866,7 +4865,8 @@ object Queries {
         .select((col("c_custkey") + 1000000).as("c_custkey"),
           col("c_acctbal"), lit("NEW").as("c_mktsegment"),
           lit(false).as("del")))
-    store.mergePruned("cust", src, "c_custkey", Some(col("del")))
+    store.prunedMerge("cust", src, "c_custkey",
+      graft.sources.Combine.Replace(Some(col("del"))))
     store.read("cust")
       .select(col("c_custkey"), round(col("c_acctbal"), 2).as("c_acctbal"),
         col("c_mktsegment"))
@@ -11680,13 +11680,13 @@ ORDER BY query_id"""
     val sup = t(s, dir, "supplier")
       .select(col("s_suppkey"),
         col("s_acctbal").cast("decimal(18,4)").as("bal"))
-    store.upsertPruned("t",
-      sup.repartitionByRange(4, col("s_suppkey")), "s_suppkey")
+    store.prunedMerge("t", sup, "s_suppkey",
+      graft.sources.Combine.Replace(), initialFiles = 4)
     val v1 = store.committedVersion("t").get
-    store.upsertPruned("t",
+    store.prunedMerge("t",
       sup.filter(col("s_suppkey") % 2 === 0L)
         .withColumn("bal", (col("bal") + lit(100L)).cast("decimal(18,4)")),
-      "s_suppkey")
+      "s_suppkey", graft.sources.Combine.Replace())
     val v2 = store.committedVersion("t").get
     store.diffVersions("t", v1, v2)
       .groupBy("op")
@@ -11890,13 +11890,13 @@ ORDER BY query_id"""
     val cust = t(s, dir, "customer")
       .select(col("c_custkey"),
         col("c_acctbal").cast("decimal(18,4)").as("bal"))
-    store.upsertPruned("src",
-      cust.repartitionByRange(4, col("c_custkey")), "c_custkey")
+    store.prunedMerge("src", cust, "c_custkey",
+      graft.sources.Combine.Replace(), initialFiles = 4)
     store.cloneSchema("src", "dst")
-    store.upsertPruned("dst",
+    store.prunedMerge("dst",
       cust.filter(col("c_custkey") <= 50L)
         .withColumn("bal", col("bal") + lit(1000L)),
-      "c_custkey")
+      "c_custkey", graft.sources.Combine.Replace())
     Seq("dst", "src").map { tbl =>
       store.read(tbl).agg(
         count(lit(1)).as("n"),
@@ -12959,12 +12959,12 @@ ORDER BY query_id"""
     val ev = t(s, dir, "events")
       .select(col("event_id"), col("user_id"), col("event_type"),
         coalesce(col("value"), lit(0.0)).as("value"))
-    store.upsertPruned("raw",
-      ev.repartitionByRange(4, col("event_id")), "event_id")
-    store.upsertPruned("stats",
+    store.prunedMerge("raw", ev, "event_id",
+      graft.sources.Combine.Replace(), initialFiles = 4)
+    store.prunedMerge("stats",
       ev.groupBy("event_type").agg(count(lit(1)).as("n"),
         sum(col("value").cast("decimal(18,4)")).as("total")),
-      "event_type")
+      "event_type", graft.sources.Combine.Replace())
     // the erasure: negative delta first (from the still-present rows),
     // then the row-level delete through the pruned MERGE
     val erased = store.read("raw").filter(col("user_id") % 97 === 0L)
@@ -12978,10 +12978,10 @@ ORDER BY query_id"""
     // forgotten users corrects to n = 0 and must VANISH from the
     // registry (the survivors-only oracle emits no row for it), not
     // linger as a stale zero row
-    store.mergePruned("stats", corrected, "event_type",
-      deleteWhen = Some(col("n") === 0L))
-    store.mergePruned("raw", erased.select("event_id"), "event_id",
-      deleteWhen = Some(lit(true)))
+    store.prunedMerge("stats", corrected, "event_type",
+      graft.sources.Combine.Replace(deleteWhen = Some(col("n") === 0L)))
+    store.prunedMerge("raw", erased.select("event_id"), "event_id",
+      graft.sources.Combine.Replace(deleteWhen = Some(lit(true))))
     store.read("stats")
       .select(col("event_type"), col("n"),
         round(col("total").cast("double"), 2).as("total"))
@@ -14380,14 +14380,16 @@ ORDER BY query_id"""
       val parts = t(s, dir, "part")
         .select(col("p_partkey"),
           col("p_retailprice").cast("decimal(18,4)").as("price"))
-      store.upsertPruned("tbl",
-        parts.repartitionByRange(4, col("p_partkey")), "p_partkey")
-      store.upsertPruned("tbl",
+      store.prunedMerge("tbl", parts, "p_partkey",
+        graft.sources.Combine.Replace(), initialFiles = 4)
+      store.prunedMerge("tbl",
         parts.filter(col("p_partkey") <= 40L)
-          .withColumn("price", col("price") + lit(10L)), "p_partkey")
-      store.upsertPruned("tbl",
+          .withColumn("price", col("price") + lit(10L)), "p_partkey",
+        graft.sources.Combine.Replace())
+      store.prunedMerge("tbl",
         parts.filter(col("p_partkey") <= 80L)
-          .withColumn("price", col("price") + lit(100L)), "p_partkey")
+          .withColumn("price", col("price") + lit(100L)), "p_partkey",
+        graft.sources.Combine.Replace())
       val gens = store.versions("tbl").sorted // oldest first
       val preRestore = store.readVersion("tbl", gens.last)
       store.restoreVersion("tbl", gens.head)

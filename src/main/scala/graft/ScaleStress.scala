@@ -233,7 +233,7 @@ object ScaleStress {
       .toDF().count())
     // pruned merge SLOPES: the same 1k-key narrow update against 2M-
     // and 8M-row tables (32 range files each). merge()'s cost grows
-    // with the table (full rewrite); mergePruned's stays at the fixed
+    // with the table (full rewrite); prunedMerge's stays at the fixed
     // manifest/commit overhead + one rewritten file. On a page-cache-
     // hot single box the absolute crossover sits further out, but the
     // SLOPES are the 100 TB story: O(table) vs O(touched).
@@ -243,8 +243,8 @@ object ScaleStress {
       val base = spark.range(rows).select(col("id").as("k"),
         concat(lit("v"), col("id"), lit("-"),
           md5(col("id").cast("string"))).as("v"))
-      store.mergePruned("big",
-        base.repartitionByRange(32, col("k")), "k")
+      store.prunedMerge("big", base, "k", sources.Combine.Replace(),
+        initialFiles = 32)
       store.merge("big_copy", base.repartitionByRange(32, col("k")), "k")
       val upd = spark.range(1000).select((col("id") + 100000).as("k"),
         lit("UPD").as("v"))
@@ -252,7 +252,7 @@ object ScaleStress {
       store.merge("big_copy", upd, "k")
       val fullS = (System.nanoTime() - tM) / 1e9
       val tP = System.nanoTime()
-      store.mergePruned("big", upd, "k")
+      store.prunedMerge("big", upd, "k", sources.Combine.Replace())
       val prunedS = (System.nanoTime() - tP) / 1e9
       val n = store.count("big")
       println(f"STRESS pruned_merge_${rows / 1000000}m full=$fullS%.1f s " +

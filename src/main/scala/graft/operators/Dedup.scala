@@ -671,16 +671,16 @@ object Dedup {
     *
     * Commit shape (the part that decides 100 TB viability): the
     * registry lives range-partitioned on `fingerprint` and every
-    * batch commits through the store's FILE-PRUNED upsert —
-    * [[graft.sources.ResultStore.readForKeys]] reads back only the
-    * registry rows for THIS batch's fingerprints (file-range pruning,
-    * O(touched files)), the min-merge runs on that batch-sized frame,
-    * and [[graft.sources.ResultStore.upsertPruned]] rewrites only the
-    * files containing touched keys, hard-linking the rest. Per-batch
-    * write cost is therefore bounded by the batch's key footprint —
-    * NOT the registry size — so total write volume over N batches is
-    * linear in the corpus, where a read-everything/overwrite commit
-    * would be quadratic. At production scale the same body runs
+    * batch commits through ONE file-pruned min-merge,
+    * [[graft.sources.ResultStore.prunedMerge]] with
+    * [[graft.sources.Combine.Min]]: it reads only the registry files
+    * whose fingerprint range can hold one of THIS batch's
+    * fingerprints, takes the per-fingerprint minimum over those rows
+    * and the batch, rewrites those files and hard-links the rest.
+    * Per-batch write cost is therefore bounded by the batch's key
+    * footprint — NOT the registry size — so total write volume over N
+    * batches is linear in the corpus, where a read-everything/overwrite
+    * commit would be quadratic. At production scale the same body runs
     * against a Delta/Iceberg MERGE (the store's documented swap
     * point); state is one thin row per distinct document, not the
     * corpus. `onCommit` receives each batch's (schema, PrunedCommit)
@@ -707,21 +707,10 @@ object Dedup {
           .select(col(idCol).cast("long").as("doc_id"),
             TextFunctions.fingerprint(col(textCol)).as("fingerprint"))
           .groupBy("fingerprint").agg(min("doc_id").as("doc_id")))
-        val stats =
-          if (!store.hasSchema(schema))
-            // first commit fixes the registry layout: disjoint
-            // fingerprint ranges so later batches touch few files
-            store.upsertPruned(schema,
-              mins.repartitionByRange(registryPartitions, col("fingerprint")),
-              "fingerprint")
-          else {
-            // min-merge against ONLY the stored rows for this batch's
-            // fingerprints — batch-sized on both sides
-            val known = store.readForKeys(schema, mins, "fingerprint")
-            val src = known.unionByName(mins)
-              .groupBy("fingerprint").agg(min("doc_id").as("doc_id"))
-            store.upsertPruned(schema, src, "fingerprint")
-          }
+        // the first commit fixes the registry layout: disjoint
+        // fingerprint ranges so later batches touch few files
+        val stats = store.prunedMerge(schema, mins, "fingerprint",
+          graft.sources.Combine.Min("doc_id"), registryPartitions)
         onCommit(schema, stats)
         }
       }
@@ -760,14 +749,13 @@ object Dedup {
     * Commit shape: both registry tables commit FILE-PRUNED, so
     * per-batch write cost is bounded by the batch's key footprint and
     * total write volume stays linear in the corpus. Both are pure
-    * set-unions through
-    * [[graft.sources.ResultStore.insertDistinctPruned]] — the pair
-    * table keyed on `id_a`, the sig table keyed on `band_key` (its
-    * read-side join key — a doc's band rows are COMPLETE and
-    * deterministic from content, so the previous replace-by-doc
-    * semantics equal set-union and a replayed doc re-inserts
-    * identical rows, leaving the table unchanged; nothing is ever
-    * deleted).
+    * set-unions ([[graft.sources.ResultStore.prunedMerge]] with
+    * [[graft.sources.Combine.SetUnion]]) — the pair table keyed on
+    * `id_a`, the sig table keyed on `band_key` (its read-side join
+    * key — a doc's band rows are COMPLETE and deterministic from
+    * content, so the previous replace-by-doc semantics equal
+    * set-union and a replayed doc re-inserts identical rows, leaving
+    * the table unchanged; nothing is ever deleted).
     *
     * PRECONDITION — content is immutable per doc id: the set-union
     * equivalence above holds only because re-seeing an id means
@@ -826,33 +814,16 @@ object Dedup {
             .select(least(col("id"), col("__old")).as("id_a"),
               greatest(col("id"), col("__old")).as("id_b"))
         val pairs = Lineage.cutLocal(within.unionByName(cross).distinct())
-        val pairStats =
-          if (!store.hasSchema(pairSchema))
-            store.upsertPruned(pairSchema,
-              pairs.repartitionByRange(registryPartitions, col("id_a"),
-                col("id_b")),
-              "id_a")
-          else store.insertDistinctPruned(pairSchema, pairs, "id_a")
+        val pairStats = store.prunedMerge(pairSchema, pairs, "id_a",
+          graft.sources.Combine.SetUnion, registryPartitions)
         onCommit(pairSchema, pairStats)
-        val sigRows = sigs.select(col("id").as("doc_id"),
-          col("band"), col("band_key"))
         // keyed and laid out on band_key — the READ side's join key —
         // so the candidate lookup above can file-prune; set-union
         // insert (see the commit-shape scaladoc for why replace-by-doc
-        // equals set-union here). Only the INITIAL commit distincts
-        // explicitly (insertDistinctPruned takes the first source
-        // verbatim — the caller owns initial distinctness); every
-        // later commit's combine already set-union-dedups, so a
-        // per-batch distinct() would pay one extra exchange + agg per
-        // micro-batch for rows that are unique by construction anyway
-        // (one band row per (doc, band) out of the posexplode).
-        val sigStats =
-          if (!store.hasSchema(sigSchema))
-            store.insertDistinctPruned(sigSchema,
-              sigRows.distinct().repartitionByRange(registryPartitions,
-                col("band_key")),
-              "band_key")
-          else store.insertDistinctPruned(sigSchema, sigRows, "band_key")
+        // equals set-union here)
+        val sigStats = store.prunedMerge(sigSchema,
+          sigs.select(col("id").as("doc_id"), col("band"), col("band_key")),
+          "band_key", graft.sources.Combine.SetUnion, registryPartitions)
         onCommit(sigSchema, sigStats)
         }
       }

@@ -1,6 +1,6 @@
 package graft.sources
 
-import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.query.FilterDsl
 
@@ -78,17 +78,56 @@ class ResultStore(spark: SparkSession, root: String) {
     * committed generation's metadata (every mutation path must carry it
     * — a maintenance upsert that silently dropped a streaming sink's
     * batch-id marker would disarm its exactly-once replay guard);
-    * a non-empty `meta` replaces it ([[overwriteWithMeta]]). */
+    * a non-empty `meta` replaces it ([[overwriteWithMeta]]). With a
+    * `statsKey` the generation also gets its key-range sidecar, so the
+    * next [[prunedMerge]] can prune. */
   private def commit(schema: String, df: DataFrame,
-      meta: Map[String, String] = Map.empty): Unit = {
+      meta: Map[String, String] = Map.empty,
+      statsKey: Option[String] = None): Unit =
+    publish(schema, inherited(schema, meta)) { (version, dir) =>
+      df.write.mode(SaveMode.Overwrite).parquet(dir.getPath)
+      statsKey.foreach(k => writeStatsRows(schema, version, k,
+        computeStats(dir.getPath, k, df.schema)))
+    }
+
+  /** `meta`, or the committed generation's metadata when `meta` is
+    * empty — [[commit]]'s table-properties rule. */
+  private def inherited(schema: String, meta: Map[String, String]) =
+    if (meta.nonEmpty) meta else committedMeta(schema)
+
+  /** Publishes a new generation of `schema`: `fill(version, dir)` writes
+    * its files into the fresh version directory, `meta` lands as its
+    * `_META`, and the pointer flips, keeping the generation it replaced
+    * for lazy readers. Returns what `fill` returned. */
+  private def publish[A](schema: String, meta: Map[String, String])(
+      fill: (String, java.io.File) => A): A = {
     val version = nextVersion(schema)
     val previous = currentVersion(schema)
-    val effective = if (meta.nonEmpty) meta else committedMeta(schema)
-    df.write.mode(SaveMode.Overwrite).parquet(s"$root/$schema/$version")
-    writeMeta(versionDir(schema, version), effective)
+    val dir = versionDir(schema, version)
+    val filled = fill(version, dir)
+    writeMeta(dir, meta)
     beforeSwapHook()
     flipPointer(schema, version, keepPrevious = previous)
+    filled
   }
+
+  /** Hard-links `files` into `dir` (O(files) metadata ops, no data
+    * copy) and returns the names they got there. Part-file names carry
+    * a per-job UUID, so a clash with a file already in `dir` does not
+    * occur; if one ever does, the file links as `prev-<name>` (parquet
+    * reads every data file in the directory whatever its name) —
+    * skipping it would drop its rows, and a double clash fails the
+    * commit loudly with the old generation intact. */
+  private def linkInto(
+      dir: java.io.File, files: Array[java.io.File]): Array[String] =
+    files.map { f =>
+      val plain = new java.io.File(dir, f.getName)
+      val target =
+        if (plain.exists()) new java.io.File(dir, "prev-" + f.getName)
+        else plain
+      java.nio.file.Files.createLink(target.toPath, f.toPath)
+      target.getName
+    }
 
   /** Commit metadata rides INSIDE the version directory (`_META`, an
     * underscore file the parquet reader ignores), so it becomes visible
@@ -111,17 +150,20 @@ class ResultStore(spark: SparkSession, root: String) {
     * Survives every mutation (inherited on commit, carried through
     * [[compact]], rides [[rollback]]'s target version). */
   def committedMeta(schema: String): Map[String, String] =
-    currentVersion(schema).map { v =>
-      val f = new java.io.File(versionDir(schema, v), "_META")
-      if (!f.exists()) Map.empty[String, String]
-      else {
-        val p = new java.util.Properties()
-        val in = java.nio.file.Files.newInputStream(f.toPath)
-        try p.load(in) finally in.close()
-        import scala.jdk.CollectionConverters._
-        p.asScala.toMap
-      }
-    }.getOrElse(Map.empty)
+    currentVersion(schema).map(v => readMeta(versionDir(schema, v)))
+      .getOrElse(Map.empty)
+
+  private def readMeta(dir: java.io.File): Map[String, String] = {
+    val f = new java.io.File(dir, "_META")
+    if (!f.exists()) Map.empty
+    else {
+      val p = new java.util.Properties()
+      val in = java.nio.file.Files.newInputStream(f.toPath)
+      try p.load(in) finally in.close()
+      import scala.jdk.CollectionConverters._
+      p.asScala.toMap
+    }
+  }
 
   /** How many committed generations each flip retains (newest-first).
     * Default 2 — the current generation plus the immediately-previous
@@ -296,35 +338,20 @@ class ResultStore(spark: SparkSession, root: String) {
       currentVersion(schema).contains(version),
       s"version '$version' of '$schema' was never committed " +
         "(no _COMMITTED marker) — refusing to restore a strand")
-    val previous = currentVersion(schema)
-    val next = nextVersion(schema)
-    val to = versionDir(schema, next)
-    to.mkdirs()
-    dataFiles(from).foreach { f =>
-      java.nio.file.Files.createLink(
-        new java.io.File(to, f.getName).toPath, f.toPath)
-    }
-    val statsF = new java.io.File(from, "_STATS")
-    if (statsF.isFile)
-      java.nio.file.Files.createLink(
-        new java.io.File(to, "_STATS").toPath, statsF.toPath)
-    val legacyStats = new java.io.File(from, "_stats")
-    if (legacyStats.isDirectory) {
-      val toStats = new java.io.File(to, "_stats")
-      toStats.mkdirs()
-      Option(legacyStats.listFiles()).getOrElse(Array.empty)
-        .filter(_.isFile)
-        .foreach(f => java.nio.file.Files.createLink(
-          new java.io.File(toStats, f.getName).toPath, f.toPath))
-    }
-    val metaF = new java.io.File(from, "_META")
-    if (metaF.isFile)
-      java.nio.file.Files.createLink(
-        new java.io.File(to, "_META").toPath, metaF.toPath)
-    beforeSwapHook()
-    flipPointer(schema, next, keepPrevious = previous)
-    next
+    linkGeneration(from, schema)
   }
+
+  /** Publishes a new generation of `schema` that hard-links the data
+    * files and key-range sidecar of the generation directory `from`
+    * (O(files) metadata ops, zero bytes copied or re-read) and carries
+    * its `_META`. Returns the new version. */
+  private def linkGeneration(from: java.io.File, schema: String): String =
+    publish(schema, readMeta(from)) { (version, dir) =>
+      dir.mkdirs()
+      linkInto(dir, dataFiles(from) ++
+        Array(new java.io.File(from, "_STATS")).filter(_.isFile))
+      version
+    }
 
   /** Append rows — through the SAME versioned commit as rewrites, so
     * the class-level atomicity claim holds for appends too: the new
@@ -335,35 +362,9 @@ class ResultStore(spark: SparkSession, root: String) {
     * flips atomically. A crash at any point leaves the old version
     * fully intact and readable, and lazy readers taken before the
     * append still scan exactly the files they resolved (links keep
-    * the old directory's files alive through one GC generation). */
-  def insert(schema: String, df: DataFrame): Unit =
-    currentVersion(schema) match {
-      case Some(prev) =>
-        val version = nextVersion(schema)
-        val newDir = new java.io.File(schemaDir(schema), version)
-        df.write.mode(SaveMode.Overwrite).parquet(newDir.getPath)
-        val prevDir = new java.io.File(schemaDir(schema), prev)
-        Option(prevDir.listFiles()).getOrElse(Array.empty)
-          .filter(f => f.isFile && !f.getName.startsWith("_") &&
-            !f.getName.startsWith("."))
-          .foreach { f =>
-            // part-file names carry a per-job UUID, so collisions with
-            // the fresh write don't occur; if one ever does, link under
-            // an alternate name (parquet reads every data file in the
-            // dir regardless of name) — silently skipping would drop
-            // the previous version's rows, and a double collision
-            // fails the commit loudly with the old table intact
-            val target0 = new java.io.File(newDir, f.getName)
-            val target =
-              if (target0.exists()) new java.io.File(newDir, "prev-" + f.getName)
-              else target0
-            java.nio.file.Files.createLink(target.toPath, f.toPath)
-          }
-        writeMeta(newDir, committedMeta(schema)) // table-properties carry
-        beforeSwapHook()
-        flipPointer(schema, version, keepPrevious = Some(prev))
-      case None => commit(schema, df)
-    }
+    * the old directory's files alive through one GC generation). It is
+    * [[appendSegment]] without the receipt. */
+  def insert(schema: String, df: DataFrame): Unit = appendSegment(schema, df)
 
   /** LSM-style merge-on-read segment append — the commit shape whose
     * cost is bounded by the BATCH, never the table: `df` (a batch's
@@ -390,34 +391,16 @@ class ResultStore(spark: SparkSession, root: String) {
     * compaction/pruned commit re-establishes it. Returns the
     * per-commit write receipt the batch-bounded-cost spec pins. */
   def appendSegment(schema: String, df: DataFrame,
-      meta: Map[String, String] = Map.empty): SegmentCommit =
-    currentVersion(schema) match {
-      case Some(prev) =>
-        val version = nextVersion(schema)
-        val newDir = new java.io.File(schemaDir(schema), version)
-        val effective = if (meta.nonEmpty) meta else committedMeta(schema)
-        df.write.mode(SaveMode.Overwrite).parquet(newDir.getPath)
-        val fresh = dataFiles(newDir)
-        val (newFiles, newBytes) = (fresh.length, fresh.map(_.length()).sum)
-        val prevDir = new java.io.File(schemaDir(schema), prev)
-        val carried = dataFiles(prevDir).map { f =>
-          val target0 = new java.io.File(newDir, f.getName)
-          val target =
-            if (target0.exists()) new java.io.File(newDir, "prev-" + f.getName)
-            else target0
-          java.nio.file.Files.createLink(target.toPath, f.toPath)
-        }.length
-        writeMeta(newDir, effective)
-        beforeSwapHook()
-        flipPointer(schema, version, keepPrevious = Some(prev))
-        SegmentCommit(newFiles, newBytes, carried)
-      case None =>
-        commit(schema, df, meta)
-        val v = currentVersion(schema).get
-        val fresh = dataFiles(versionDir(schema, v))
-        SegmentCommit(fresh.length, fresh.map(_.length()).sum,
-          carriedFiles = 0)
+      meta: Map[String, String] = Map.empty): SegmentCommit = {
+    val carry = currentVersion(schema)
+      .map(v => dataFiles(versionDir(schema, v))).getOrElse(Array.empty)
+    publish(schema, inherited(schema, meta)) { (_, dir) =>
+      df.write.mode(SaveMode.Overwrite).parquet(dir.getPath)
+      val fresh = dataFiles(dir)
+      SegmentCommit(fresh.length, fresh.map(_.length()).sum,
+        carriedFiles = linkInto(dir, carry).length)
     }
+  }
 
   def overwrite(schema: String, df: DataFrame): Unit = commit(schema, df)
 
@@ -448,10 +431,31 @@ class ResultStore(spark: SparkSession, root: String) {
       schema: String, df: DataFrame, meta: Map[String, String])(
       guard: Map[String, String] => Boolean): Boolean = {
     if (!guard(committedMeta(schema))) return false
+    publishStaged(schema, writeTo(df))(guard(committedMeta(schema)), meta)
+      .isDefined
+  }
+
+  private def writeTo(df: DataFrame)(dir: java.io.File): Unit =
+    df.write.mode(SaveMode.Overwrite).parquet(dir.getPath)
+
+  /** The staged publish protocol of [[overwriteWithMetaIf]],
+    * [[overwriteIf]] and [[compact]]. `write` fills a unique staging
+    * directory outside any lock, so racing writers never touch each
+    * other's files. Then, under an exclusive file lock on `_LOCK`
+    * (which serializes racing committers within and across processes
+    * on one filesystem), `check` re-validates the committed state, the
+    * next version is claimed, the staging directory moves into place
+    * with `meta` as its `_META`, and the pointer flips. Returns the
+    * published version, or None when `check` refused. One try/finally
+    * spans the staging write AND the locked commit: a failed write or a
+    * refused commit leaves the committed table untouched and the
+    * staging directory deleted. */
+  private def publishStaged(schema: String, write: java.io.File => Unit)(
+      check: => Boolean, meta: => Map[String, String]): Option[String] = {
     val staging = new java.io.File(schemaDir(schema),
       s".staged-${java.util.UUID.randomUUID()}")
     try {
-      df.write.mode(SaveMode.Overwrite).parquet(staging.getPath)
+      write(staging)
       beforeSwapHook()
       val ch = java.nio.channels.FileChannel.open(
         new java.io.File(schemaDir(schema), "_LOCK").toPath,
@@ -460,16 +464,16 @@ class ResultStore(spark: SparkSession, root: String) {
       try {
         val lock = ch.lock()
         try {
-          if (!guard(committedMeta(schema))) false
+          if (!check) None
           else {
             val previous = currentVersion(schema)
             val version = nextVersion(schema)
             java.nio.file.Files.move(staging.toPath,
-              new java.io.File(schemaDir(schema), version).toPath,
+              versionDir(schema, version).toPath,
               java.nio.file.StandardCopyOption.ATOMIC_MOVE)
             writeMeta(versionDir(schema, version), meta)
             flipPointer(schema, version, keepPrevious = previous)
-            true
+            Some(version)
           }
         } finally lock.release()
       } finally ch.close()
@@ -498,42 +502,16 @@ class ResultStore(spark: SparkSession, root: String) {
     * staging directory is deleted on refusal. */
   def overwriteIf(
       schema: String, df: DataFrame, expected: Option[String]): String = {
-    def check(): Unit = {
+    def check(): Boolean = {
       val cur = currentVersion(schema)
       if (cur != expected)
         throw new java.util.ConcurrentModificationException(
           s"schema '$schema': expected version $expected but found $cur")
+      true
     }
     check()
-    val staging = new java.io.File(schemaDir(schema),
-      s".staged-${java.util.UUID.randomUUID()}")
-    // ONE try/finally spans the staging write AND the locked commit: a
-    // failed parquet write must not leak the .staged-<uuid> directory
-    // any more than a refused commit does
-    try {
-      df.write.mode(SaveMode.Overwrite).parquet(staging.getPath)
-      beforeSwapHook()
-      val ch = java.nio.channels.FileChannel.open(
-        new java.io.File(schemaDir(schema), "_LOCK").toPath,
-        java.nio.file.StandardOpenOption.CREATE,
-        java.nio.file.StandardOpenOption.WRITE)
-      try {
-        val lock = ch.lock()
-        try {
-          check()
-          val version = nextVersion(schema)
-          java.nio.file.Files.move(staging.toPath,
-            new java.io.File(schemaDir(schema), version).toPath,
-            java.nio.file.StandardCopyOption.ATOMIC_MOVE)
-          // table-properties carry (read under the lock, post-check)
-          writeMeta(versionDir(schema, version), committedMeta(schema))
-          flipPointer(schema, version, keepPrevious = expected)
-          version
-        } finally lock.release()
-      } finally ch.close()
-    } finally {
-      if (staging.exists()) rmTree(staging)
-    }
+    // table-properties carry (read under the lock, post-check)
+    publishStaged(schema, writeTo(df))(check(), committedMeta(schema)).get
   }
 
   // -------------------------------------------------------------------
@@ -744,12 +722,8 @@ class ResultStore(spark: SparkSession, root: String) {
   def upsertContended(
       schema: String, df: DataFrame, keyCol: String,
       maxAttempts: Int = 12): String =
-    transact(schema, maxAttempts) {
-      case None => df
-      case Some(cur) =>
-        cur.join(df.select(keyCol), Seq(keyCol), "left_anti")
-          .unionByName(df, allowMissingColumns = true)
-    }
+    transact(schema, maxAttempts)(cur =>
+      Combine.Replace()(cur.getOrElse(df.limit(0)), df, keyCol))
 
   /** Row-level CHANGE FEED between two committed generations — the
     * Delta `table_changes` / CDF-read analog for the versioned store:
@@ -798,41 +772,22 @@ class ResultStore(spark: SparkSession, root: String) {
   def count(schema: String): Long = read(schema).count()
 
   /** Copy-on-write upsert by key: new rows win over stored rows. */
-  def upsert(schema: String, df: DataFrame, keyCol: String): Unit = {
-    val merged =
-      if (!exists0(schema)) df
-      else read(schema).join(df.select(keyCol), Seq(keyCol), "left_anti")
-        .unionByName(df, allowMissingColumns = true)
-    commit(schema, merged)
-  }
+  def upsert(schema: String, df: DataFrame, keyCol: String): Unit =
+    merge(schema, df, keyCol)
 
   /** MERGE INTO semantics over the copy-on-write store (the Delta/
     * Iceberg `MERGE` shape): source rows matching by key UPDATE the
     * stored row (source wins), optionally DELETE it instead when
     * `deleteWhen` holds on the source row, and non-matching source rows
-    * INSERT. One anti-join + one filtered union, single rewrite.
-    * A NULL `deleteWhen` evaluation means "not delete-marked" (SQL
-    * MERGE's WHEN ... AND <cond> arms treat UNKNOWN as false), hence
-    * the coalesce. */
+    * INSERT — [[Combine.Replace]] over the whole table, one anti-join +
+    * one filtered union, single rewrite. */
   def merge(
       schema: String,
       source: DataFrame,
       keyCol: String,
-      deleteWhen: Option[org.apache.spark.sql.Column] = None): Unit = {
-    def notMarked(df: DataFrame) =
-      deleteWhen.map(c => df.filter(!coalesce(c, lit(false)))).getOrElse(df)
-    if (!exists0(schema)) {
-      commit(schema, notMarked(source))
-      return
-    }
-    // stored rows keyed by ANY source row drop out (anti-join); the
-    // update/insert rows re-enter unless delete-marked — so a matched-
-    // and-marked key disappears entirely, exactly MERGE's DELETE arm
-    val stored = read(schema)
-    val survivors = stored.join(source.select(keyCol), Seq(keyCol), "left_anti")
-    val merged = survivors.unionByName(notMarked(source), allowMissingColumns = true)
-    commit(schema, merged)
-  }
+      deleteWhen: Option[Column] = None): Unit =
+    commit(schema, Combine.Replace(deleteWhen)(
+      if (exists0(schema)) read(schema) else source.limit(0), source, keyCol))
 
   /** Delete by predicate (copy-on-write). */
   def delete(schema: String, filters: (String, Any)*): Unit = {
@@ -844,7 +799,7 @@ class ResultStore(spark: SparkSession, root: String) {
   // File-pruned MERGE — the row-level-transaction path. merge() above
   // rewrites the whole table per commit; at 100 TB a 1k-row update
   // batch must not re-read and re-write 100 TB. This path keeps a
-  // per-file key-range manifest (`_stats` parquet sidecar inside each
+  // per-file key-range manifest (the `_STATS` sidecar inside each
   // version directory — the Delta/Iceberg file-statistics analog),
   // rewrites ONLY the files whose key range can contain a source key,
   // and hard-links every other data file into the new version
@@ -855,9 +810,6 @@ class ResultStore(spark: SparkSession, root: String) {
 
   private def versionDir(schema: String, version: String) =
     new java.io.File(schemaDir(schema), version)
-
-  private def statsPath(schema: String, version: String): String =
-    new java.io.File(versionDir(schema, version), "_stats").getPath
 
   private def statsFile(schema: String, version: String): java.io.File =
     new java.io.File(versionDir(schema, version), "_STATS")
@@ -993,10 +945,8 @@ class ResultStore(spark: SparkSession, root: String) {
     * present AND keyed by `keyCol`; None means "no pruning possible"
     * (foreign commit, append, or a different merge key) and the
     * caller falls back to a full rewrite — which re-establishes the
-    * sidecar. Resolution order: handle cache (zero cost), the
-    * driver-side `_STATS` file (zero Spark jobs), then the legacy
-    * `_stats` parquet directory (one job, result cached) — a registry
-    * written before the format change keeps pruning. */
+    * sidecar. Resolution order: handle cache (zero cost), then the
+    * driver-side `_STATS` file (zero Spark jobs). */
   private def readStatsRows(schema: String, version: String, keyCol: String)
       : Option[Array[(String, Option[String], Option[String])]] = {
     val cacheKey = s"$schema/$version/$keyCol"
@@ -1004,7 +954,8 @@ class ResultStore(spark: SparkSession, root: String) {
     if (cached != null) return cached
     val f = statsFile(schema, version)
     val got: Option[Array[(String, Option[String], Option[String])]] =
-      if (f.isFile) {
+      if (!f.isFile) None
+      else {
         val p = new java.util.Properties()
         val in = java.nio.file.Files.newInputStream(f.toPath)
         try p.load(in) finally in.close()
@@ -1012,38 +963,9 @@ class ResultStore(spark: SparkSession, root: String) {
         else Some(Array.tabulate(p.getProperty("n", "0").toInt)(i =>
           (p.getProperty(s"f$i"),
             Option(p.getProperty(s"lo$i")), Option(p.getProperty(s"hi$i")))))
-      } else {
-        val legacy = new java.io.File(statsPath(schema, version))
-        if (!legacy.isDirectory) None
-        else {
-          val rows = spark.read.parquet(legacy.getPath)
-            .select("file", "kmin", "kmax", "key_col").collect()
-          if (rows.nonEmpty && rows.forall(_.getString(3) == keyCol))
-            Some(rows.map(r =>
-              (r.getString(0), Option(r.getString(1)),
-                Option(r.getString(2)))))
-          else None
-        }
       }
     cacheStats(schema, version, keyCol, got)
     got
-  }
-
-  /** Commit `df` as the new table AND write its key-range sidecar, so
-    * the next mergePruned can prune. */
-  private def commitWithStats(
-      schema: String, df: DataFrame, keyCol: String,
-      meta: Map[String, String] = Map.empty): Unit = {
-    val version = nextVersion(schema)
-    val previous = currentVersion(schema)
-    val dir = versionDir(schema, version)
-    val effective = if (meta.nonEmpty) meta else committedMeta(schema)
-    df.write.mode(SaveMode.Overwrite).parquet(dir.getPath)
-    writeStatsRows(schema, version, keyCol,
-      computeStats(dir.getPath, keyCol, df.schema))
-    writeMeta(dir, effective) // table-properties carry (commit()'s rule)
-    beforeSwapHook()
-    flipPointer(schema, version, keepPrevious = previous)
   }
 
   /** [[overwriteWithMeta]] that ALSO writes the key-range sidecar —
@@ -1055,121 +977,41 @@ class ResultStore(spark: SparkSession, root: String) {
     * `keyCol` so file ranges are disjoint. */
   def overwriteWithStats(schema: String, df: DataFrame, keyCol: String,
       meta: Map[String, String] = Map.empty): Unit =
-    commitWithStats(schema, df, keyCol, meta)
+    commit(schema, df, meta, statsKey = Some(keyCol))
 
-  /** MERGE INTO with file pruning: same semantics and same atomicity
-    * as [[merge]], table-rewrite cost proportional to the touched key
-    * ranges. Prune logic is scale-shaped: the manifest (one key range
-    * per data file) rides the source-key scan as a literal and each key
-    * is tested against it in the job that computes the keys — the
-    * source is never collected, and the only driver-side
+  /** MERGE INTO with file pruning: folds `delta` into the table by
+    * `combine` with the same atomicity as [[merge]] and a table-rewrite
+    * cost proportional to the touched key ranges. A missing table
+    * counts as empty: the first commit is `combine(empty, delta)`,
+    * range-partitioned on `keyCol` into `initialFiles` files so file
+    * key ranges are disjoint and a narrow later batch touches few
+    * files. Every later commit reads only the touched files' rows,
+    * combines them with the delta, re-range-partitions the result on
+    * the key so ranges STAY disjoint, and hard-links every other file
+    * unchanged. Prune logic is scale-shaped: the manifest (one key
+    * range per data file) rides the delta-key scan as a literal and
+    * each key is tested against it in the job that computes the keys —
+    * the delta is never collected, and the only driver-side
     * materialization is the touched-file list, bounded by the file
-    * count like every manifest operation. Write the initial table
-    * range-partitioned on the key (`repartitionByRange`) so file key
-    * ranges are disjoint and a narrow update batch touches few files;
-    * rewritten files are re-range-partitioned on the key so ranges
-    * STAY disjoint across incremental commits. Returns how many prior
-    * data files were rewritten vs hard-linked unchanged — the
-    * per-commit cost readout an incremental caller asserts on. */
-  def mergePruned(
-      schema: String,
-      source: DataFrame,
-      keyCol: String,
-      deleteWhen: Option[org.apache.spark.sql.Column] = None,
-      meta: Map[String, String] = Map.empty): PrunedCommit = {
-    def notMarked(df: DataFrame) =
-      deleteWhen.map(c => df.filter(!coalesce(c, lit(false)))).getOrElse(df)
-    prunedCore(schema, source, keyCol,
-      initial = notMarked(source),
-      combine = (storedTouched, src) => storedTouched
-        .join(src.select(keyCol), Seq(keyCol), "left_anti")
-        .unionByName(notMarked(src), allowMissingColumns = true),
-      allowWidening = true, meta = meta)
-  }
-
-  /** Copy-on-write upsert through the file-pruned path. Like every
-    * mutation, an empty `meta` INHERITS the committed metadata and a
-    * non-empty one replaces it atomically with the data — the hook
-    * non-idempotent incremental sinks use to ride (stream_id,
-    * batch_id) replay markers on batch-sized commits
-    * ([[graft.operators.Materialized.applyBatchOnce]]'s contract,
-    * without forcing a full-table overwrite). */
-  def upsertPruned(schema: String, df: DataFrame, keyCol: String,
-      meta: Map[String, String] = Map.empty): PrunedCommit =
-    mergePruned(schema, df, keyCol, deleteWhen = None, meta = meta)
-
-  /** Set-union INSERT through the file-pruned path: the committed
-    * table becomes `stored ∪ source` with full-row duplicates removed
-    * — the idempotent-insert shape an at-least-once incremental
-    * registry needs (a replayed batch re-inserts rows that are
-    * already present and the table is unchanged). Unlike
-    * [[mergePruned]], stored rows sharing a key with a source row
-    * SURVIVE — nothing is deleted, ever. Pruning is sound because a
-    * stored row equal to a source row necessarily lies in a file whose `keyCol`
-    * range contains that key (it IS that key), i.e. a touched file;
-    * dedup therefore only needs touched-file rows + source. The first
-    * commit takes `source` verbatim — the caller controls layout
-    * (range-partition it on `keyCol`) and initial distinctness. */
-  def insertDistinctPruned(
-      schema: String, source: DataFrame, keyCol: String,
-      meta: Map[String, String] = Map.empty): PrunedCommit =
-    prunedCore(schema, source, keyCol,
-      initial = source,
-      combine = (storedTouched, src) => storedTouched.unionByName(src).distinct(),
-      allowWidening = false, meta = meta)
-
-  /** ADDITIVE merge through the file-pruned path: the committed table
-    * becomes `groupBy(groupCols).agg(sum(statCols))` over
-    * (touched-file rows ∪ delta) with untouched files carried forward
-    * — the one-pass form of "read back this batch's keys, re-aggregate
-    * additively, upsert". The two-pass form ([[readForKeys]] +
-    * union/re-aggregate + [[upsertPruned]]) reads every touched file
-    * TWICE and pays two touched-file collects + two extra action
-    * analyses per micro-batch — a real per-commit fixed cost for the
-    * streaming registries (graft.streaming.Registries), whose batches
-    * are small by design. Semantics are identical: rows in touched
-    * files whose key is absent from `delta` aggregate to themselves
-    * (sum over a singleton), exactly the rows the two-pass form
-    * carried through its anti-join; rows sharing the delta's keys
-    * merge additively, exactly the rows the two-pass form re-read and
-    * re-aggregated. `groupCols` must lead with `keyCol` and the delta
-    * must carry the table's exact schema (no widening).
-    *
-    * `registryPartitions` lays out the INITIAL commit
-    * (range-partitioned on the key, the pruning precondition); later
-    * commits re-range-partition through [[mergePruned]]'s shared
-    * file-sizing rule. */
-  def mergeAdditivePruned(
+    * count like every manifest operation. Like every mutation, an
+    * empty `meta` INHERITS the committed metadata and a non-empty one
+    * replaces it atomically with the data — the hook replay-guarded
+    * incremental sinks use to ride their batch markers on batch-sized
+    * commits. A delta with columns the table lacks takes one full
+    * rewrite when the combine allows widening ([[Combine.widens]]) and
+    * is refused otherwise. Returns how many prior data files were
+    * rewritten vs hard-linked unchanged — the per-commit cost readout
+    * an incremental caller asserts on. */
+  def prunedMerge(
       schema: String,
       delta: DataFrame,
       keyCol: String,
-      groupCols: Seq[String],
-      statCols: Seq[String],
-      registryPartitions: Int,
-      meta: Map[String, String] = Map.empty): PrunedCommit = {
-    require(groupCols.headOption.contains(keyCol),
-      "groupCols must lead with the registry key")
-    def reagg(stored: DataFrame, d: DataFrame) =
-      stored.unionByName(d)
-        .groupBy(groupCols.map(col): _*)
-        .agg(sum(statCols.head).as(statCols.head),
-          statCols.tail.map(c => sum(c).as(c)): _*)
-    prunedCore(schema, delta, keyCol,
-      initial = delta.repartitionByRange(registryPartitions, col(keyCol)),
-      combine = reagg,
-      allowWidening = false, meta = meta)
-  }
-
-  private def prunedCore(
-      schema: String,
-      source: DataFrame,
-      keyCol: String,
-      initial: => DataFrame,
-      combine: (DataFrame, DataFrame) => DataFrame,
-      allowWidening: Boolean,
+      combine: Combine,
+      initialFiles: Int = 1,
       meta: Map[String, String] = Map.empty): PrunedCommit = {
     if (!exists0(schema)) {
-      commitWithStats(schema, initial, keyCol, meta)
+      commit(schema, combine(delta.limit(0), delta, keyCol)
+        .repartitionByRange(initialFiles, col(keyCol)), meta, Some(keyCol))
       return PrunedCommit(rewrittenFiles = 0, carriedFiles = 0)
     }
     // one handle on the committed table: every schema/type/plan use
@@ -1178,28 +1020,26 @@ class ResultStore(spark: SparkSession, root: String) {
     // fixed cost for micro-batch callers
     val stored = read(schema)
     def fullRewrite(): PrunedCommit = {
-      val prevFiles = currentVersion(schema)
-        .map(v => dataFiles(versionDir(schema, v)).length).getOrElse(0)
-      commitWithStats(schema, combine(stored, source), keyCol, meta)
+      val prevFiles = dataFileCount(schema)
+      commit(schema, combine(stored, delta, keyCol), meta, Some(keyCol))
       PrunedCommit(rewrittenFiles = prevFiles, carriedFiles = 0)
     }
-    // schema evolution (source adds columns) would leave the carried-
+    // schema evolution (delta adds columns) would leave the carried-
     // forward files narrower than the rewritten ones — a mixed-schema
     // version directory plain parquet reads resolve arbitrarily. A
     // widening merge therefore rewrites everything once; subsequent
     // same-shape merges prune again.
-    val widens = (source.columns.toSet -- stored.columns.toSet).nonEmpty
-    if (widens && !allowWidening)
+    val added = delta.columns.toSet -- stored.columns.toSet
+    if (added.nonEmpty && !combine.widens)
       throw new IllegalArgumentException(
-        s"insertDistinctPruned('$schema'): source adds columns " +
-          s"${(source.columns.toSet -- stored.columns.toSet).mkString(", ")} " +
-          "— set-union insert requires an identical schema")
+        s"prunedMerge('$schema', ${combine.productPrefix}): delta adds " +
+          s"columns ${added.mkString(", ")} — ${combine.productPrefix} " +
+          "requires the table's exact schema")
     val prev = currentVersion(schema).get
-    readStatsRows(schema, prev, keyCol) match {
+    readStatsRows(schema, prev, keyCol).filter(_ => added.isEmpty) match {
       case None => fullRewrite()
-      case Some(_) if widens => fullRewrite()
       case Some(statRows) => graft.operators.Lineage.withoutAqe(spark) {
-        val touched = touchedFileNames(source, keyCol,
+        val touched = touchedFileNames(delta, keyCol,
           stored.schema(keyCol).dataType, statRows)
         val prevDir = versionDir(schema, prev)
         val oldByFile = statRows
@@ -1210,7 +1050,7 @@ class ResultStore(spark: SparkSession, root: String) {
         val (touchedFiles, untouchedFiles) = dataFiles(prevDir).partition(
           f => touched.contains(f.getName) || !oldByFile.contains(f.getName))
         // merge input = rows of touched files only; stored rows in
-        // untouched files cannot match any source key (every stored
+        // untouched files cannot match any delta key (every stored
         // key lies inside its file's range) and carry forward as-is
         val storedTouched =
           if (touchedFiles.isEmpty)
@@ -1245,31 +1085,19 @@ class ResultStore(spark: SparkSession, root: String) {
           math.max(1, touchedFiles.length),
           math.ceil(
             touchedFiles.map(_.length()).sum.toDouble / targetBytes).toInt)
-        val merged = combine(storedTouched, source)
+        val merged = combine(storedTouched, delta, keyCol)
           .repartitionByRange(outParts, col(keyCol))
-
-        val version = nextVersion(schema)
-        val newDir = versionDir(schema, version)
-        merged.write.mode(SaveMode.Overwrite).parquet(newDir.getPath)
-        // new files' stats BEFORE linking (the dir holds only them now)
-        val newStats = computeStats(newDir.getPath, keyCol, merged.schema)
-        val carried = untouchedFiles.map { f =>
-          val target0 = new java.io.File(newDir, f.getName)
-          val target =
-            if (target0.exists()) new java.io.File(newDir, "prev-" + f.getName)
-            else target0
-          java.nio.file.Files.createLink(target.toPath, f.toPath)
-          target.getName
+        publish(schema, inherited(schema, meta)) { (version, dir) =>
+          merged.write.mode(SaveMode.Overwrite).parquet(dir.getPath)
+          // new files' stats BEFORE linking (the dir holds only them now)
+          val newStats = computeStats(dir.getPath, keyCol, merged.schema)
+          val carriedStats = untouchedFiles.zip(linkInto(dir, untouchedFiles))
+            .map { case (f, name) =>
+              val (lo, hi) = oldByFile(f.getName)
+              (name, lo, hi)
+            }
+          writeStatsRows(schema, version, keyCol, newStats ++ carriedStats)
         }
-        val carriedStats = untouchedFiles.zip(carried).map { case (f, name) =>
-          val (lo, hi) = oldByFile(f.getName)
-          (name, lo, hi)
-        }
-        writeStatsRows(schema, version, keyCol, newStats ++ carriedStats)
-        writeMeta(versionDir(schema, version),
-          if (meta.nonEmpty) meta else committedMeta(schema))
-        beforeSwapHook()
-        flipPointer(schema, version, keepPrevious = Some(prev))
         PrunedCommit(rewrittenFiles = touchedFiles.length,
           carriedFiles = untouchedFiles.length)
       }
@@ -1326,32 +1154,10 @@ class ResultStore(spark: SparkSession, root: String) {
     val srcVersion = currentVersion(src).getOrElse(
       throw new NoSuchElementException(s"No committed data for '$src'"))
     require(!exists0(dst), s"clone target '$dst' already exists")
-    val from = versionDir(src, srcVersion)
-    val version = nextVersion(dst)
-    val to = versionDir(dst, version)
-    to.mkdirs()
-    dataFiles(from).foreach { f =>
-      java.nio.file.Files.createLink(
-        new java.io.File(to, f.getName).toPath, f.toPath)
-    }
-    // link the key-range sidecar so the clone's first pruned merge
-    // can prune immediately: the driver-side `_STATS` file, or the
-    // legacy `_stats` parquet directory for pre-format-change tables
-    val statsF = new java.io.File(from, "_STATS")
-    if (statsF.isFile)
-      java.nio.file.Files.createLink(
-        new java.io.File(to, "_STATS").toPath, statsF.toPath)
-    val stats = new java.io.File(from, "_stats")
-    if (stats.isDirectory) {
-      val toStats = new java.io.File(to, "_stats")
-      toStats.mkdirs()
-      Option(stats.listFiles()).getOrElse(Array.empty)
-        .filter(_.isFile)
-        .foreach(f => java.nio.file.Files.createLink(
-          new java.io.File(toStats, f.getName).toPath, f.toPath))
-    }
-    writeMeta(to, committedMeta(src))
-    flipPointer(dst, version, keepPrevious = None)
+    // the linked key-range sidecar lets the clone's first pruned merge
+    // prune immediately
+    linkGeneration(versionDir(src, srcVersion), dst)
+    ()
   }
 
   /** Read ONLY the stored rows whose `keyCol` value appears in `keys` —
@@ -1403,7 +1209,7 @@ class ResultStore(spark: SparkSession, root: String) {
     *
     * The key-range sidecar, if present, deliberately does NOT carry
     * over: compaction re-groups rows across files, invalidating
-    * per-file ranges; the next mergePruned rebuilds it (the same
+    * per-file ranges; the next prunedMerge rebuilds it (the same
     * policy appends follow).
     *
     * Scale shape: one distributed job over ONLY the small files'
@@ -1429,9 +1235,7 @@ class ResultStore(spark: SparkSession, root: String) {
     val (small, large) = files.partition(_.length() < targetBytes)
     if (small.length <= 1) return (files.length, files.length)
 
-    val staging = new java.io.File(schemaDir(schema),
-      s".staged-${java.util.UUID.randomUUID()}")
-    try {
+    val version = publishStaged(schema, staging => {
       val smallBytes = small.map(_.length()).sum
       val nBins =
         math.max(1, math.ceil(smallBytes.toDouble / targetBytes).toInt)
@@ -1441,42 +1245,21 @@ class ResultStore(spark: SparkSession, root: String) {
         .parquet(small.map(_.getPath).toIndexedSeq: _*)
         .repartition(nBins)
         .write.mode(SaveMode.Overwrite).parquet(staging.getPath)
-      large.foreach { f =>
-        val target0 = new java.io.File(staging, f.getName)
-        val target =
-          if (target0.exists()) new java.io.File(staging, "prev-" + f.getName)
-          else target0
-        java.nio.file.Files.createLink(target.toPath, f.toPath)
-      }
-      // commit metadata carries FORWARD through compaction: rows are
-      // only re-grouped, so the generation's meta (e.g. a streaming
-      // sink's last-applied batch id) must survive — dropping it would
-      // disarm the exactly-once replay guard mid-stream
-      writeMeta(staging, committedMeta(schema))
-      beforeSwapHook()
-      val ch = java.nio.channels.FileChannel.open(
-        new java.io.File(schemaDir(schema), "_LOCK").toPath,
-        java.nio.file.StandardOpenOption.CREATE,
-        java.nio.file.StandardOpenOption.WRITE)
-      try {
-        val lock = ch.lock()
-        try {
-          val cur = currentVersion(schema)
-          if (cur != Some(prev))
-            throw new java.util.ConcurrentModificationException(
-              s"schema '$schema': compact started from $prev but found " +
-                s"$cur at commit time; rerun compact")
-          val version = nextVersion(schema)
-          val newDir = versionDir(schema, version)
-          java.nio.file.Files.move(staging.toPath, newDir.toPath,
-            java.nio.file.StandardCopyOption.ATOMIC_MOVE)
-          flipPointer(schema, version, keepPrevious = Some(prev))
-          (files.length, dataFiles(newDir).length)
-        } finally lock.release()
-      } finally ch.close()
-    } finally {
-      if (staging.exists()) rmTree(staging)
-    }
+      linkInto(staging, large)
+    })({
+      val cur = currentVersion(schema)
+      if (cur != Some(prev))
+        throw new java.util.ConcurrentModificationException(
+          s"schema '$schema': compact started from $prev but found " +
+            s"$cur at commit time; rerun compact")
+      true
+    },
+    // commit metadata carries FORWARD through compaction: rows are
+    // only re-grouped, so the generation's meta (e.g. a streaming
+    // sink's last-applied batch id) must survive — dropping it would
+    // disarm the exactly-once replay guard mid-stream
+    committedMeta(schema))
+    (files.length, dataFiles(versionDir(schema, version.get)).length)
   }
 
   /** Streaming upsert sink: foreachBatch → upsert per micro-batch
@@ -1499,7 +1282,7 @@ class ResultStore(spark: SparkSession, root: String) {
   def streamingMerge(
       stream: DataFrame, schema: String, keyCol: String,
       checkpoint: String,
-      deleteWhen: Option[org.apache.spark.sql.Column] = None)
+      deleteWhen: Option[Column] = None)
       : org.apache.spark.sql.streaming.StreamingQuery =
     stream.writeStream
       .option("checkpointLocation", checkpoint)
@@ -1525,6 +1308,67 @@ object ResultStore {
           "get NO cross-process claim exclusion and a crashed foreign " +
           "claimant cannot be swept. Use the filesystem default or an " +
           "object-store endpoint URL for multi-process deployments.")
+}
+
+/** How [[ResultStore.prunedMerge]] folds a batch's delta into the stored
+  * rows it can touch: the rows of the files whose key range holds a
+  * delta key, or no rows on the table's first commit. Every case leaves
+  * a stored row whose key is absent from the delta as it is, which is
+  * what lets untouched files carry forward unread. */
+sealed trait Combine extends Product with Serializable {
+  def apply(stored: DataFrame, delta: DataFrame, keyCol: String): DataFrame
+
+  /** Whether a delta with columns the table lacks may commit (by one full
+    * rewrite). Only a replace can widen: a set union, a sum or a min
+    * across rows of two shapes has no meaning. */
+  def widens: Boolean = false
+}
+
+object Combine {
+
+  /** Replace by key (MERGE INTO): stored rows whose key appears in the
+    * delta drop out and the delta's rows take their place; a delta row
+    * on which `deleteWhen` holds deletes its key instead. A NULL
+    * `deleteWhen` evaluation means "not delete-marked" (SQL MERGE's
+    * WHEN ... AND <cond> arms treat UNKNOWN as false). */
+  final case class Replace(deleteWhen: Option[Column] = None) extends Combine {
+    def apply(stored: DataFrame, delta: DataFrame, keyCol: String): DataFrame =
+      stored.join(delta.select(keyCol), Seq(keyCol), "left_anti")
+        .unionByName(
+          deleteWhen.fold(delta)(c => delta.filter(!coalesce(c, lit(false)))),
+          allowMissingColumns = true)
+    override def widens: Boolean = true
+  }
+
+  /** Set union: `stored ∪ delta` without duplicate rows. A replayed batch
+    * leaves the table unchanged and nothing is ever deleted; stored rows
+    * sharing a key with a delta row survive. */
+  case object SetUnion extends Combine {
+    def apply(stored: DataFrame, delta: DataFrame, keyCol: String): DataFrame =
+      stored.unionByName(delta).distinct()
+  }
+
+  /** Additive statistics: `groupBy(groupCols)` and `sum(statCols)` over
+    * both sides. `groupCols` leads with the key. */
+  final case class Additive(groupCols: Seq[String], statCols: Seq[String])
+      extends Combine {
+    def aggregate(rows: DataFrame): DataFrame =
+      rows.groupBy(groupCols.map(col): _*)
+        .agg(sum(statCols.head).as(statCols.head),
+          statCols.tail.map(c => sum(c).as(c)): _*)
+    def apply(stored: DataFrame, delta: DataFrame, keyCol: String): DataFrame = {
+      require(groupCols.headOption.contains(keyCol),
+        "groupCols must lead with the registry key")
+      aggregate(stored.unionByName(delta))
+    }
+  }
+
+  /** The minimum `valueCol` per key: a merge whose result does not depend
+    * on arrival order or batch boundaries. */
+  final case class Min(valueCol: String) extends Combine {
+    def apply(stored: DataFrame, delta: DataFrame, keyCol: String): DataFrame =
+      stored.unionByName(delta).groupBy(keyCol).agg(min(valueCol).as(valueCol))
+  }
 }
 
 /** Outcome of a file-pruned commit: how many of the prior generation's

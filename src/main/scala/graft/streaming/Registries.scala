@@ -27,11 +27,11 @@ import graft.operators.Lineage
   *
   * TWO write paths, chosen by the registry's KEY GEOMETRY:
   *
-  *  - '''Pruned upsert''' (source stats, histograms): the batch's
+  *  - '''Pruned merge''' (source stats, histograms): the batch's
   *    keys are FEW (sources, (source, bucket) cells), so the
-  *    read-back of the batch's stored rows + file-pruned rewrite
-  *    touches a handful of the range-partitioned files — per-commit
-  *    cost O(touched files), which tracks the batch.
+  *    file-pruned additive merge reads and rewrites a handful of the
+  *    range-partitioned files — per-commit cost O(touched files),
+  *    which tracks the batch.
   *  - '''Merge-on-read segments''' (token/bigram vocabularies): the
   *    batch's keys are UNIFORM over the whole key space, so "touched
   *    files" ≈ ALL files and a pruned upsert degrades to rewriting
@@ -84,10 +84,8 @@ object Registries {
       schema: String,
       groupCols: Seq[String],
       statCols: Seq[String]): DataFrame =
-    store.read(schema)
-      .groupBy(groupCols.map(col): _*)
-      .agg(sum(statCols.head).as(statCols.head),
-        statCols.tail.map(c => sum(c).as(c)): _*)
+    graft.sources.Combine.Additive(groupCols, statCols)
+      .aggregate(store.read(schema))
 
   /** [[readMerged]] for a [[incrementalTokenCounts]] registry:
     * `(key, n)`. */
@@ -140,8 +138,7 @@ object Registries {
     * cells are mergeable forever.
     *
     * Pruned path (keys = few grid cells, clustered); per-stream
-    * `txn.` replay map, pruned point-read of the batch's keys,
-    * file-pruned upsert. Bucket cells ride WITH their key (the merge
+    * `txn.` replay map, one file-pruned additive merge. Bucket cells ride WITH their key (the merge
     * groups on (key, bucket)), so the registry stays laid out and
     * pruned on `key` alone. */
   def incrementalHistogram(
@@ -249,8 +246,9 @@ object Registries {
   /** The pruned-upsert additive skeleton: per-stream `txn.<stream_id>`
     * replay map (carried forward wholesale on every commit), batch
     * delta aggregate, then ONE file-pruned additive commit
-    * ([[graft.sources.ResultStore.mergeAdditivePruned]] — touched-file
-    * rows ∪ delta re-aggregated, untouched files carried forward).
+    * ([[graft.sources.ResultStore.prunedMerge]] with
+    * [[graft.sources.Combine.Additive]] — touched-file rows ∪ delta
+    * re-aggregated, untouched files carried forward).
     * `groupCols` must start with "key" — the registry's layout,
     * pruning, and upsert key. For few/clustered key spaces only — see
     * the class doc and [[additiveSegmented]].
@@ -282,16 +280,14 @@ object Registries {
     additiveCore(stream, store, schema, streamId, checkpoint) {
       (batch, txns, _) =>
         val delta = Lineage.cutLocal(deltaOf(batch))
-        // ONE pruned commit does the whole additive merge (touched
-        // rows ∪ delta re-aggregated, untouched files carried): the
-        // pre-r17 two-pass shape (readForKeys point-read + union +
-        // re-aggregate + upsertPruned) read every touched file twice
-        // and paid two touched-file collects + their plan analyses
-        // per micro-batch — a fixed per-commit driver cost that
-        // dominates small batches (graft.tools.Probe attributed the
-        // st16/17/18 wall to addBatch, not the engine's WALs).
-        val stats = store.mergeAdditivePruned(schema, delta, "key",
-          groupCols, statCols, registryPartitions, meta = txns)
+        // ONE pruned commit does the whole additive merge: touched
+        // rows ∪ delta re-aggregated, untouched files carried. Reading
+        // the batch's keys back first would read every touched file
+        // twice and add a touched-file collect per micro-batch, a fixed
+        // driver cost that dominates small batches.
+        val stats = store.prunedMerge(schema, delta, "key",
+          graft.sources.Combine.Additive(groupCols, statCols),
+          registryPartitions, meta = txns)
         onCommit(schema, stats)
     }
   }
@@ -351,10 +347,8 @@ object Registries {
           // a fresh range-partitioned base WITH a key-range sidecar
           // (ad-hoc point reads prune again until the next segment
           // lands). Registry-sized, amortized over compactEvery.
-          val merged = store.read(schema).unionByName(delta)
-            .groupBy(groupCols.map(col): _*)
-            .agg(sum(statCols.head).as(statCols.head),
-              statCols.tail.map(c => sum(c).as(c)): _*)
+          val merged = graft.sources.Combine.Additive(groupCols, statCols)(
+              store.read(schema), delta, "key")
             .repartitionByRange(registryPartitions, col("key"))
           store.overwriteWithStats(schema, merged, "key",
             txns + (SegmentsKey -> "0"))

@@ -144,14 +144,17 @@ object StreamRunner {
     * design), and the per-batch commit machinery (manifest, sidecar,
     * pointer flip) is paid once instead of twice. The commit is the
     * idempotent set-union insert ([[graft.sources.ResultStore
-    * .insertDistinctPruned]]): the predicate is deterministic, so an
-    * at-least-once replayed micro-batch re-inserts identical
-    * (row, arm) tuples and the table is unchanged — no txn marker
-    * needed. Empty batches skip the commit.
+    * .prunedMerge]] with [[graft.sources.Combine.SetUnion]]): the
+    * predicate is deterministic, so an at-least-once replayed
+    * micro-batch re-inserts identical (row, arm) tuples and the table
+    * is unchanged — no txn marker needed. Empty batches skip the
+    * commit.
     *
     * Scale shape per batch: one predicate evaluation fused into the
     * batch scan (a `when`, not two filtered passes), one
-    * batch-footprint pruned commit keyed on `keyCol`. */
+    * batch-footprint pruned commit keyed on `keyCol`. Only the first
+    * commit range-partitions, into `registryPartitions` files; a later
+    * one re-range-partitions just the rewritten rows. */
   def quarantineStream(
       stream: DataFrame,
       violation: org.apache.spark.sql.Column,
@@ -170,9 +173,8 @@ object StreamRunner {
             batch.withColumn(ArmCol,
               when(bad, lit(QuarantineArm)).otherwise(lit(CleanArm))))
           if (routed.take(1).nonEmpty) {
-            store.insertDistinctPruned(schema,
-              routed.repartitionByRange(registryPartitions, col(keyCol)),
-              keyCol)
+            store.prunedMerge(schema, routed, keyCol,
+              graft.sources.Combine.SetUnion, registryPartitions)
             ()
           }
         }

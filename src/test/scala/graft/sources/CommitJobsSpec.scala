@@ -6,6 +6,7 @@ import java.util.concurrent.atomic.AtomicInteger
 import scala.collection.mutable
 
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+import org.apache.spark.sql.functions.{col, size}
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.{SparkTestSession, Tables}
@@ -129,5 +130,47 @@ class CommitJobsSpec extends AnyFunSuite {
     assert(store.read("stats").as[(String, Long, Long, Long)].collect()
       .map(r => r._1 -> r._2).toMap ==
       Map("web" -> 25L, "book" -> 27L, "wiki" -> 24L))
+  }
+
+  test("a one-file refresh of an st21-style quarantine stream: job count") {
+    val tmp = Files.createTempDirectory("graft-commit-jobs-quarantine")
+    val in = Files.createDirectory(tmp.resolve("in"))
+    val store = new ResultStore(spark, s"$tmp/store")
+    def refresh(): Unit = StreamRunner.quarantineStream(
+      StreamRunner.parquetStream(spark, in.toString, 1),
+      violation = !(size(graft.functions.TextFunctions.wsTokens(col("text"))) >= 10),
+      "doc_id", store, "routed", s"$tmp/ckpt")
+      .awaitTermination()
+    (0 until 2).foreach { i => land(tmp, in, i); refresh() }
+    // range-partitioning every batch before the pruned commit cost a
+    // sampling job and a shuffle per batch: 5 jobs
+    val jobs = (2 until 5).map { i => land(tmp, in, i); jobsOf(refresh()) }
+    assert(jobs.forall(_ <= 3), s"quarantine refresh jobs per batch: $jobs")
+    assert(StreamRunner.quarantinedRows(store, "routed").count() == 8L)
+  }
+
+  test("a one-file refresh of the exact-dedup registry: job count, and " +
+      "the files each commit rewrites and carries") {
+    val tmp = Files.createTempDirectory("graft-commit-jobs-dedup")
+    val in = Files.createDirectory(tmp.resolve("in"))
+    val store = new ResultStore(spark, s"$tmp/store")
+    val commits = mutable.ArrayBuffer.empty[(Int, Int)]
+    def refresh(): Unit = Dedup.incrementalDedup(
+      StreamRunner.parquetStream(spark, in.toString, 1), "doc_id", "text",
+      store, "registry", s"$tmp/ckpt",
+      onCommit = (_, c) => commits.synchronized {
+        commits += ((c.rewrittenFiles, c.carriedFiles))
+      })
+      .awaitTermination()
+    (0 until 2).foreach { i => land(tmp, in, i); refresh() }
+    // reading the batch's keys back before the pruned upsert cost a
+    // touched-file lookup, a key-pruned scan and their analyses: 8 jobs
+    val jobs = (2 until 5).map { i => land(tmp, in, i); jobsOf(refresh()) }
+    assert(jobs.forall(_ <= 3), s"dedup refresh jobs per batch: $jobs")
+    // (rewritten, carried) per commit, as the two-pass shape produced
+    // them on this corpus
+    assert(commits.toSeq == Seq((0, 0), (2, 6), (3, 5), (4, 4), (2, 6)),
+      s"jobs $jobs commits $commits")
+    assert(store.count("registry") == 64L + 4 * 2)
   }
 }

@@ -94,7 +94,7 @@ class ParquetFootersSpec extends AnyFunSuite {
     check("t", "overwrite")
     store.overwriteWithStats("t", rows(0, 40).repartitionByRange(4, col("k")), "k")
     check("t", "overwriteWithStats")
-    val merged = store.mergePruned("t", rows(5, 8), "k")
+    val merged = store.prunedMerge("t", rows(5, 8), "k", Combine.Replace())
     assert(merged.carriedFiles > 0, merged.toString)
     check("t", "pruned merge")
     store.appendSegment("t", rows(100, 104).repartition(2))

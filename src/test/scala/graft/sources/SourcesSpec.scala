@@ -2,6 +2,7 @@ package graft.sources
 
 import org.scalatest.funsuite.AnyFunSuite
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.DataFrame
 import graft.SparkTestSession
 
 case class KV(k: Long, v: String)
@@ -269,15 +270,14 @@ class SourcesSpec extends AnyFunSuite {
     val root = tmpDir()
     val store = new ResultStore(spark, root)
     val base = (1L to 400L).map(k => KV(k, "v" + k)).toDF()
-      .repartitionByRange(4, col("k"))
-    store.mergePruned("t", base, "k")
+    store.prunedMerge("t", base, "k", Combine.Replace(), initialFiles = 4)
     val v1 = new java.io.File(s"$root/t/v00000001")
     val v1Files = v1.listFiles().filter(f =>
       f.isFile && !f.getName.startsWith("_") && !f.getName.startsWith("."))
     assert(v1Files.length == 4)
     // narrow update: keys 10..20 live in ONE range file
     val upd = (10L to 20L).map(k => KV(k, "UPD")).toDF()
-    store.mergePruned("t", upd, "k")
+    store.prunedMerge("t", upd, "k", Combine.Replace())
     val v2 = new java.io.File(s"$root/t/v00000002")
     val carried = v1Files.filter { f =>
       val twin = new java.io.File(v2, f.getName)
@@ -296,7 +296,7 @@ class SourcesSpec extends AnyFunSuite {
   test("mergePruned matches merge on a randomized op sequence") {
     val rnd = new scala.util.Random(20260813)
     val a = new ResultStore(spark, tmpDir()) // merge (full rewrite)
-    val b = new ResultStore(spark, tmpDir()) // mergePruned
+    val b = new ResultStore(spark, tmpDir()) // prunedMerge
     def df(rows: Seq[(Long, String)]) = rows.map(KV.tupled).toDF()
     def randRows() = (1 to 1 + rnd.nextInt(6)).map(_ =>
       (rnd.nextInt(30).toLong, "v" + rnd.nextInt(5)))
@@ -306,7 +306,7 @@ class SourcesSpec extends AnyFunSuite {
         (k, if (rnd.nextInt(4) == 0) "DEL" else v) }
       val del = Some(col("v") === "DEL")
       a.merge("p", df(rows), "k", del)
-      b.mergePruned("p", df(rows), "k", del)
+      b.prunedMerge("p", df(rows), "k", Combine.Replace(del))
       val ra = a.read("p").collect()
         .map(r => r.getAs[Long]("k") -> r.getAs[String]("v")).toMap
       val rb = b.read("p").collect()
@@ -317,23 +317,23 @@ class SourcesSpec extends AnyFunSuite {
 
   test("mergePruned: inserts outside every file range, widening, foreign commits") {
     val store = new ResultStore(spark, tmpDir())
-    store.mergePruned("x",
-      (1L to 100L).map(k => KV(k, "a")).toDF().repartitionByRange(2, col("k")),
-      "k")
+    store.prunedMerge("x", (1L to 100L).map(k => KV(k, "a")).toDF(), "k",
+      Combine.Replace(), initialFiles = 2)
     // keys beyond every range → pure insert, no stored row lost
-    store.mergePruned("x", Seq(KV(500L, "new")).toDF(), "k")
+    store.prunedMerge("x", Seq(KV(500L, "new")).toDF(), "k", Combine.Replace())
     assert(store.count("x") == 101)
     assert(store.get("x", "k" -> 500L).getAs[String]("v") == "new")
     // widening source falls back to a full rewrite and keeps both cols
-    store.mergePruned("x",
-      Seq((7L, "wide", 1.5)).toDF("k", "v", "w"), "k")
+    store.prunedMerge("x",
+      Seq((7L, "wide", 1.5)).toDF("k", "v", "w"), "k", Combine.Replace())
     val r7 = store.get("x", "k" -> 7L)
     assert(r7.getAs[String]("v") == "wide" && r7.getAs[Double]("w") == 1.5)
     assert(store.get("x", "k" -> 8L).isNullAt(
       store.read("x").columns.indexOf("w")))
     // a foreign commit (overwrite writes no sidecar) still merges
     store.overwrite("x", Seq(KV(1, "o1"), KV(2, "o2")).toDF())
-    store.mergePruned("x", Seq(KV(2, "m2"), KV(3, "m3")).toDF(), "k")
+    store.prunedMerge("x", Seq(KV(2, "m2"), KV(3, "m3")).toDF(), "k",
+      Combine.Replace())
     val got = store.read("x").collect()
       .map(r => r.getAs[Long]("k") -> r.getAs[String]("v")).toMap
     assert(got == Map(1L -> "o1", 2L -> "m2", 3L -> "m3"))
@@ -345,16 +345,15 @@ class SourcesSpec extends AnyFunSuite {
       override protected def beforeSwapHook(): Unit =
         if (crash) throw new RuntimeException("injected crash")
     }
-    store.mergePruned("c",
-      (1L to 50L).map(k => KV(k, "v" + k)).toDF()
-        .repartitionByRange(2, col("k")), "k")
+    store.prunedMerge("c", (1L to 50L).map(k => KV(k, "v" + k)).toDF(), "k",
+      Combine.Replace(), initialFiles = 2)
     crash = true
     intercept[RuntimeException](
-      store.mergePruned("c", Seq(KV(5L, "X")).toDF(), "k"))
+      store.prunedMerge("c", Seq(KV(5L, "X")).toDF(), "k", Combine.Replace()))
     crash = false
     assert(store.get("c", "k" -> 5L).getAs[String]("v") == "v5")
     // and the store recovers: the same merge succeeds afterwards
-    store.mergePruned("c", Seq(KV(5L, "X")).toDF(), "k")
+    store.prunedMerge("c", Seq(KV(5L, "X")).toDF(), "k", Combine.Replace())
     assert(store.get("c", "k" -> 5L).getAs[String]("v") == "X")
     assert(store.count("c") == 50)
   }
@@ -362,30 +361,35 @@ class SourcesSpec extends AnyFunSuite {
   test("insertDistinctPruned: set-union, replay is a no-op, nothing deleted") {
     val store = new ResultStore(spark, tmpDir())
     val base = (1L to 100L).map(k => KV(k, "v" + k)).toDF()
-      .repartitionByRange(4, col("k"))
-    store.insertDistinctPruned("u", base, "k")
+    store.prunedMerge("u", base, "k", Combine.SetUnion, initialFiles = 4)
     // same key, DIFFERENT row → both survive (no delete-by-key)
     val batch = Seq(KV(10L, "other"), KV(10L, "v10"), KV(500L, "new")).toDF()
-    val c1 = store.insertDistinctPruned("u", batch, "k")
+    val c1 = store.prunedMerge("u", batch, "k", Combine.SetUnion)
     assert(store.count("u") == 102) // v10 dupe dropped, other+new added
     assert(c1.rewrittenFiles <= 2 && c1.carriedFiles >= 3, c1.toString)
     // at-least-once replay: identical batch leaves the table unchanged
     val before = store.read("u").collect().map(r =>
       (r.getAs[Long]("k"), r.getAs[String]("v"))).sorted.toSeq
-    store.insertDistinctPruned("u", batch, "k")
+    store.prunedMerge("u", batch, "k", Combine.SetUnion)
     val after = store.read("u").collect().map(r =>
       (r.getAs[Long]("k"), r.getAs[String]("v"))).sorted.toSeq
     assert(before == after)
-    // widening source is rejected (set-union needs identical schema)
-    intercept[IllegalArgumentException](store.insertDistinctPruned("u",
-      Seq((1L, "x", 2.0)).toDF("k", "v", "w"), "k"))
+    // a widening delta is refused by every combine but Replace (a set
+    // union, a sum or a min needs the table's exact schema), and the
+    // error names the combine that refused it
+    Seq(Combine.SetUnion, Combine.Additive(Seq("k"), Seq("v")),
+        Combine.Min("v")).foreach { c =>
+      val e = intercept[IllegalArgumentException](store.prunedMerge("u",
+        Seq((1L, "x", 2.0)).toDF("k", "v", "w"), "k", c))
+      assert(e.getMessage.startsWith(s"prunedMerge('u', ${c.productPrefix}): ") &&
+        e.getMessage.contains("adds columns w"), e.getMessage)
+    }
   }
 
   test("readForKeys returns exactly the stored rows for the requested keys") {
     val store = new ResultStore(spark, tmpDir())
-    store.upsertPruned("rk",
-      (1L to 200L).map(k => KV(k, "v" + k)).toDF()
-        .repartitionByRange(4, col("k")), "k")
+    store.prunedMerge("rk", (1L to 200L).map(k => KV(k, "v" + k)).toDF(), "k",
+      Combine.Replace(), initialFiles = 4)
     val got = store.readForKeys("rk",
       Seq(7L, 42L, 9999L).toDF("k"), "k").collect()
       .map(r => r.getAs[Long]("k") -> r.getAs[String]("v")).toMap
@@ -400,45 +404,55 @@ class SourcesSpec extends AnyFunSuite {
   test("mergeAdditivePruned equals the two-pass readForKeys + " +
       "re-aggregate + upsertPruned shape it replaced, at its pruned cost") {
     // same batch sequence through both shapes: clustered keys so the
-    // pruned path actually prunes, overlapping keys so the additive
+    // pruned path actually prunes, overlapping keys so the
     // re-aggregate actually merges, disjoint new keys so the rewrite
     // extends the key space
-    val batches = Seq(
-      (1L to 40L).map(k => (k, 1L, 10L)),
-      (20L to 60L).map(k => (k, 2L, 5L)),
-      (55L to 70L).map(k => (k, 1L, 1L)))
-      .map(_.toDF("key", "n_docs", "n_tokens"))
-    val groupCols = Seq("key")
-    val statCols = Seq("n_docs", "n_tokens")
-    val a = new ResultStore(spark, tmpDir())
-    val receipts = batches.map(b =>
-      a.mergeAdditivePruned("reg", b, "key", groupCols, statCols, 4))
-    val b2 = new ResultStore(spark, tmpDir())
-    batches.foreach { b =>
-      if (!b2.hasSchema("reg"))
-        b2.upsertPruned("reg", b.repartitionByRange(4, col("key")), "key")
-      else {
-        val merged = b2.readForKeys("reg", b, "key")
-          .unionByName(b)
-          .groupBy("key").agg(sum("n_docs").as("n_docs"),
-            sum("n_tokens").as("n_tokens"))
-        b2.upsertPruned("reg", merged, "key")
-      }
+    val keys = Seq(1L to 40L, 20L to 60L, 55L to 70L)
+    val additive = keys.zip(Seq((1L, 10L), (2L, 5L), (1L, 1L))).map {
+      case (ks, (d, t)) => ks.map(k => (k, d, t)).toDF("key", "n_docs", "n_tokens")
     }
-    def tbl(s: ResultStore) = s.read("reg").collect()
-      .map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).sorted.toSeq
-    assert(tbl(a) == tbl(b2))
-    // and the one-pass path still prunes: the third batch (55-70)
-    // must carry at least one file of the 1-40 range forward
-    assert(receipts.last.carriedFiles >= 1, receipts.toString)
+    // values rise and fall across batches, so the minimum comes from
+    // the stored side for some keys and from the batch for others
+    val mins = keys.zipWithIndex.map { case (ks, i) =>
+      ks.map(k => (k, (k * 7 + i * 13) % 23)).toDF("key", "doc_id")
+    }
+    def twoPass(reagg: DataFrame => DataFrame, batches: Seq[DataFrame]) = {
+      val store = new ResultStore(spark, tmpDir())
+      batches.foreach { b =>
+        if (!store.hasSchema("reg"))
+          store.prunedMerge("reg", b, "key", Combine.Replace(), initialFiles = 4)
+        else
+          store.prunedMerge("reg",
+            reagg(store.readForKeys("reg", b, "key").unionByName(b)), "key",
+            Combine.Replace())
+      }
+      store
+    }
+    Seq[(Combine, DataFrame => DataFrame, Seq[DataFrame])](
+      (Combine.Additive(Seq("key"), Seq("n_docs", "n_tokens")),
+        _.groupBy("key").agg(sum("n_docs").as("n_docs"),
+          sum("n_tokens").as("n_tokens")),
+        additive),
+      (Combine.Min("doc_id"), _.groupBy("key").agg(min("doc_id").as("doc_id")),
+        mins)).foreach { case (combine, reagg, batches) =>
+      val a = new ResultStore(spark, tmpDir())
+      val receipts = batches.map(b =>
+        a.prunedMerge("reg", b, "key", combine, initialFiles = 4))
+      def tbl(s: ResultStore) = s.read("reg")
+        .select(batches.head.columns.map(col): _*)
+        .collect().map(_.toSeq.map(_.asInstanceOf[Long])).sortBy(_.head).toSeq
+      assert(tbl(a) == tbl(twoPass(reagg, batches)), combine.toString)
+      // and the one-pass path still prunes: the third batch (55-70)
+      // must carry at least one file of the 1-40 range forward
+      assert(receipts.last.carriedFiles >= 1, s"$combine $receipts")
+    }
   }
 
   test("cloneSchema: zero-copy clone reads identically, diverges " +
       "independently, carries the pruning sidecar") {
     val store = new ResultStore(spark, tmpDir())
-    store.upsertPruned("src",
-      (1L to 100L).map(k => KV(k, "v" + k)).toDF()
-        .repartitionByRange(4, col("k")), "k")
+    store.prunedMerge("src", (1L to 100L).map(k => KV(k, "v" + k)).toDF(), "k",
+      Combine.Replace(), initialFiles = 4)
     store.cloneSchema("src", "dst")
     // clone reads bit-identically at clone time
     assert(store.read("dst").collect().map(r => r.getLong(0)).sorted
@@ -446,7 +460,8 @@ class SourcesSpec extends AnyFunSuite {
         .sorted))
     // the sidecar hard-linked over: the clone's FIRST pruned merge
     // already prunes (carried files > 0 against a 4-file table)
-    val c = store.upsertPruned("dst", Seq(KV(1L, "x")).toDF(), "k")
+    val c = store.prunedMerge("dst", Seq(KV(1L, "x")).toDF(), "k",
+      Combine.Replace())
     assert(c.carriedFiles >= 2, c.toString)
     // divergence is one-way: dst mutated, src untouched
     assert(store.read("dst").filter(col("v") === "x").count() == 1L)
@@ -491,14 +506,14 @@ class SourcesSpec extends AnyFunSuite {
     try {
       val root = tmpDir()
       val store = new ResultStore(spark, root)
-      store.upsertPruned("s",
-        (1L to 2000L by 20L).map(k => KV(k, "v" + k)).toDF()
-          .repartitionByRange(2, col("k")), "k")
+      store.prunedMerge("s",
+        (1L to 2000L by 20L).map(k => KV(k, "v" + k)).toDF(), "k",
+        Combine.Replace(), initialFiles = 2)
       var maxFiles = 2
       for (b <- 1 to 6) {
         // 100 new keys inside the existing ranges → files grow
         val ins = (1L to 2000L by 20L).map(k => KV(k + b, s"b$b-$k")).toDF()
-        val c = store.upsertPruned("s", ins, "k")
+        val c = store.prunedMerge("s", ins, "k", Combine.Replace())
         maxFiles = math.max(maxFiles, c.totalFiles)
       }
       val dataDir = new java.io.File(s"$root/s/" + store.versions("s").last)
@@ -508,7 +523,8 @@ class SourcesSpec extends AnyFunSuite {
       assert(nFiles > 2, s"files never split: $nFiles")
       // pruning still works at the grown file count: a single-key
       // upsert rewrites O(1) files and carries the rest
-      val c = store.upsertPruned("s", Seq(KV(101L, "X")).toDF(), "k")
+      val c = store.prunedMerge("s", Seq(KV(101L, "X")).toDF(), "k",
+        Combine.Replace())
       assert(c.rewrittenFiles <= 2 && c.carriedFiles >= nFiles - 2,
         c.toString)
     } finally spark.conf.unset("spark.graft.store.targetFileBytes")
@@ -520,15 +536,14 @@ class SourcesSpec extends AnyFunSuite {
     // every commit rewrites at most 5 files (one per key range hit,
     // plus inserts landing in existing ranges), carries the rest.
     val store = new ResultStore(spark, tmpDir())
-    store.upsertPruned("reg",
-      (1L to 10000L).map(k => KV(k, "v" + k)).toDF()
-        .repartitionByRange(32, col("k")), "k")
+    store.prunedMerge("reg", (1L to 10000L).map(k => KV(k, "v" + k)).toDF(),
+      "k", Combine.Replace(), initialFiles = 32)
     var rows = 10000L
     for (b <- 1 to 6) {
       val upd = Seq(KV(b * 700L, "upd"), KV(b * 1300L, "upd"),
         KV(b * 999L, "upd"), KV(100000L + b, "ins"), KV(200000L + b, "ins"))
         .toDF().as[KV].toDF()
-      val c = store.upsertPruned("reg", upd, "k")
+      val c = store.prunedMerge("reg", upd, "k", Combine.Replace())
       // O(batch keys), with a small slack for range-boundary overlap
       // between insert files accreted by earlier batches — NEVER the
       // 32-file registry
@@ -1503,21 +1518,23 @@ class SourcesSpec extends AnyFunSuite {
     val raw = Seq((1L, 10L, "a", 2.0), (2L, 10L, "a", 3.0),
       (3L, 20L, "a", 5.0), (4L, 20L, "b", 7.0), (5L, 30L, "b", 11.0))
       .toDF("event_id", "user_id", "typ", "v")
-    store.upsertPruned("raw",
-      raw.repartitionByRange(2, col("event_id")), "event_id")
-    store.upsertPruned("stats",
+    store.prunedMerge("raw", raw, "event_id", Combine.Replace(),
+      initialFiles = 2)
+    store.prunedMerge("stats",
       raw.groupBy("typ").agg(count(lit(1)).as("n"),
-        sum(col("v").cast("decimal(18,4)")).as("total")), "typ")
+        sum(col("v").cast("decimal(18,4)")).as("total")), "typ",
+      Combine.Replace())
     // forget user 20 (keys 3 and 4, touching both types)
     val erased = store.read("raw").filter(col("user_id") === 20L)
     val delta = erased.groupBy("typ").agg(count(lit(1)).as("__dn"),
       sum(col("v").cast("decimal(18,4)")).as("__dt"))
-    store.upsertPruned("stats",
+    store.prunedMerge("stats",
       store.read("stats").join(delta, Seq("typ"))
         .select(col("typ"), (col("n") - col("__dn")).as("n"),
-          (col("total") - col("__dt")).as("total")), "typ")
-    store.mergePruned("raw", erased.select("event_id"), "event_id",
-      deleteWhen = Some(lit(true)))
+          (col("total") - col("__dt")).as("total")), "typ",
+      Combine.Replace())
+    store.prunedMerge("raw", erased.select("event_id"), "event_id",
+      Combine.Replace(deleteWhen = Some(lit(true))))
     assert(store.read("raw").select("event_id").as[Long]
       .collect().sorted.toSeq == Seq(1L, 2L, 5L))
     val stats = store.read("stats").select("typ", "n", "total")
