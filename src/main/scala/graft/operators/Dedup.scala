@@ -692,7 +692,7 @@ object Dedup {
       store: graft.sources.ResultStore,
       schema: String,
       checkpoint: String,
-      registryPartitions: Int = 8,
+      registryPartitions: Int = 1,
       onCommit: (String, graft.sources.PrunedCommit) => Unit = (_, _) => ())
       : org.apache.spark.sql.streaming.StreamingQuery =
     stream.writeStream
@@ -700,15 +700,18 @@ object Dedup {
       .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
       .foreachBatch { (batch: DataFrame, _: Long) =>
         // micro-batch work is a burst of small actions over
-        // batch-sized frames: AQE's per-exchange query-stage jobs are
-        // pure scheduling tax here (Lineage.withoutAqe's rationale)
-        Lineage.withoutAqe(batch.sparkSession) {
+        // batch-sized frames: AQE's per-exchange query-stage jobs and a
+        // core-wide shuffle width are pure scheduling tax here
+        // (Lineage.microBatch's rationale)
+        Lineage.microBatch(batch) {
         val mins = Lineage.cutLocal(batch
           .select(col(idCol).cast("long").as("doc_id"),
             TextFunctions.fingerprint(col(textCol)).as("fingerprint"))
           .groupBy("fingerprint").agg(min("doc_id").as("doc_id")))
-        // the first commit fixes the registry layout: disjoint
-        // fingerprint ranges so later batches touch few files
+        // the first commit lays the registry out in disjoint
+        // fingerprint ranges, one file per target size of the batch (at
+        // least `registryPartitions`), so later batches touch few files;
+        // rewritten files split as they outgrow the target size
         val stats = store.prunedMerge(schema, mins, "fingerprint",
           graft.sources.Combine.Min("doc_id"), registryPartitions)
         onCommit(schema, stats)
@@ -780,7 +783,7 @@ object Dedup {
       shingleN: Int = 3,
       numHashes: Int = 8,
       bands: Int = 2,
-      registryPartitions: Int = 8,
+      registryPartitions: Int = 1,
       onCommit: (String, graft.sources.PrunedCommit) => Unit = (_, _) => (),
       onPrunedRead: (Int, Int) => Unit = (_, _) => ())
       : org.apache.spark.sql.streaming.StreamingQuery = {
@@ -790,8 +793,9 @@ object Dedup {
       .option("checkpointLocation", checkpoint)
       .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
       .foreachBatch { (batch: DataFrame, _: Long) =>
-        // batch-sized frames throughout: AQE off for the burst
-        Lineage.withoutAqe(batch.sparkSession) {
+        // batch-sized frames throughout: AQE off and shuffles sized by
+        // the batch for the burst
+        Lineage.microBatch(batch) {
         val sigs = Lineage.cutLocal(portableBandKeys(
           portableSigs(
             batch.select(col(idCol).cast("long").as(idCol), col(textCol)),

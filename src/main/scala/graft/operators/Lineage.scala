@@ -148,8 +148,15 @@ private[graft] object Lineage {
     * statistics (a lineage-cut LogicalRDD reports its origin plan's
     * join-inflated estimate, or the default) clamp to the session
     * width, i.e. the helper degrades to a no-op, never a misplan. */
-  def iterPartitions(df: DataFrame): Int = {
-    val spark = df.sparkSession
+  def iterPartitions(df: DataFrame): Int =
+    widthFor(df.sparkSession, leafBytes(df))
+
+  /** [[iterPartitions]]'s rule for a plan reading `bytes`: one shuffle
+    * partition per `spark.graft.iterPartitionBytes`, at least 1 and at
+    * most the session's width; unknown (non-positive) bytes plan at the
+    * session's width. */
+  private def widthFor(
+      spark: org.apache.spark.sql.SparkSession, bytes: BigInt): Int = {
     val session = spark.conf.get("spark.sql.shuffle.partitions").toInt
     // bytes per round partition: parameterised (dev A/B + cluster
     // tuning), 4 MB default — measured at both failure ends in r16
@@ -159,11 +166,76 @@ private[graft] object Lineage {
     // SF, more tasks buy nothing).
     val per = spark.conf.getOption("spark.graft.iterPartitionBytes")
       .map(_.toLong).getOrElse(4L << 20)
-    val bytes = df.queryExecution.optimizedPlan.collectLeaves()
-      .map(_.stats.sizeInBytes).sum
     if (bytes <= 0) session
     else BigInt(session).min((bytes / per) + 1).toInt.max(1)
   }
+
+  /** The plan's LEAF input bytes, the pre-execution statistic
+    * [[iterPartitions]] sizes by. */
+  private def leafBytes(df: DataFrame): BigInt =
+    df.queryExecution.optimizedPlan.collectLeaves().map(_.stats.sizeInBytes).sum
+
+  /** The part of [[leafBytes]] that is files on disk: the sizes of the
+    * file relations `df` scans. Exact, where any other leaf (a lineage
+    * cut, a local relation) reports an estimate. */
+  def fileBytes(df: DataFrame): BigInt =
+    df.queryExecution.optimizedPlan.collectLeaves().collect {
+      case l: org.apache.spark.sql.execution.datasources.LogicalRelation
+          if l.relation.isInstanceOf[
+            org.apache.spark.sql.execution.datasources.HadoopFsRelation] =>
+        l.stats.sizeInBytes
+    }.sum
+
+  /** The part of [[leafBytes]] that is a plan estimate (lineage cuts,
+    * local relations). A cut reports its origin plan's estimate, which
+    * a join inflates to the product of its inputs; inside a
+    * [[microBatch]] window the frames derive from the batch, so the
+    * estimate counts at most the batch's bytes. */
+  def estimatedBytes(df: DataFrame): BigInt = {
+    val est = leafBytes(df) - fileBytes(df)
+    Option(batchBytes.get).fold(est)(est.min)
+  }
+
+  /** Input bytes of the registry micro-batch whose window
+    * ([[microBatch]]) the current thread runs in, or null. Not
+    * inherited: a pool thread started inside a window must not keep its
+    * bytes. */
+  private val batchBytes = new ThreadLocal[BigInt]
+
+  /** The window of one registry micro-batch: AQE off ([[withoutAqe]])
+    * and every shuffle sized by the bytes the batch reads, not by the
+    * session's core-wide width. Per-batch fixed cost is what a small
+    * micro-batch pays for (a 30 KB batch at the session's width ran
+    * about 150 near-empty tasks per round of three registries). The
+    * batch's own plans run on its session at [[iterPartitions]] width
+    * of `batch`; a store plan inside the window (a pruned merge, a
+    * compaction) runs on the store's session at the width of the
+    * batch's bytes plus the stored files it reads ([[batchWidth]]). A
+    * 30 KB batch plans at width 1; a batch above the session's width ×
+    * `spark.graft.iterPartitionBytes` keeps the session's width. */
+  def microBatch[T](batch: DataFrame)(body: => T): T = {
+    val spark = batch.sparkSession
+    val bytes = leafBytes(batch)
+    withoutAqe(spark) {
+      withShufflePartitions(spark, widthFor(spark, bytes)) {
+        val outer = batchBytes.get
+        batchBytes.set(bytes)
+        try body finally batchBytes.set(outer)
+      }
+    }
+  }
+
+  /** Runs `body`, which executes `plan`, at the shuffle width of the
+    * enclosing [[microBatch]] window's bytes plus the stored files
+    * `plan` scans ([[fileBytes]]), pinned on `plan`'s session. Outside
+    * a window it runs `body` as it is. */
+  def batchWidth[T](plan: DataFrame)(body: => T): T =
+    Option(batchBytes.get) match {
+      case Some(b) =>
+        val spark = plan.sparkSession
+        withShufflePartitions(spark, widthFor(spark, b + fileBytes(plan)))(body)
+      case None => body
+    }
 
   /** Run `body` with `spark.sql.shuffle.partitions` pinned to `n`,
     * restoring the previous value afterwards. Same single-driver

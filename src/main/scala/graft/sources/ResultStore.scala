@@ -974,21 +974,56 @@ class ResultStore(spark: SparkSession, root: String) {
     * table atomically and the next pruned merge / key-pruned point
     * read can prune immediately instead of paying one full rewrite to
     * re-establish the manifest. Write `df` range-partitioned on
-    * `keyCol` so file ranges are disjoint. */
+    * `keyCol` so file ranges are disjoint, into [[filesFor]] files.
+    * Inside a registry micro-batch its shuffles run at the batch's
+    * width ([[graft.operators.Lineage.batchWidth]]). */
   def overwriteWithStats(schema: String, df: DataFrame, keyCol: String,
       meta: Map[String, String] = Map.empty): Unit =
-    commit(schema, df, meta, statsKey = Some(keyCol))
+    graft.operators.Lineage.batchWidth(df) {
+      commit(schema, df, meta, statsKey = Some(keyCol))
+    }
+
+  private def targetFileBytes: Long = spark.conf
+    .getOption("spark.graft.store.targetFileBytes")
+    .map(_.toLong).getOrElse(128L << 20)
+
+  /** Data files for `bytes` of rows: one per
+    * `spark.graft.store.targetFileBytes` (128 MB default), and at least
+    * `floor`. */
+  private def filesFor(bytes: BigInt, floor: Int): Int =
+    ((bytes.max(0) + targetFileBytes - 1) / targetFileBytes).toInt.max(floor)
+
+  /** Data files for writing `df`, by the bytes it reads: the stored
+    * files it scans count in full, its other inputs (a batch's delta
+    * behind a lineage cut) by their plan estimate
+    * ([[graft.operators.Lineage.estimatedBytes]]), counted up to the
+    * session's shuffle width of target-size files — the cap
+    * [[graft.operators.Lineage.iterPartitions]] puts on an estimate.
+    * At least `floor` files. A batch-sized registry commit writes one
+    * file; a compaction writes one file per target size of the
+    * registry. */
+  private[graft] def filesFor(df: DataFrame, floor: Int): Int = {
+    val cap = BigInt(spark.conf.get("spark.sql.shuffle.partitions").toInt) *
+      targetFileBytes
+    filesFor(graft.operators.Lineage.fileBytes(df) +
+      graft.operators.Lineage.estimatedBytes(df).min(cap), floor)
+  }
 
   /** MERGE INTO with file pruning: folds `delta` into the table by
     * `combine` with the same atomicity as [[merge]] and a table-rewrite
     * cost proportional to the touched key ranges. A missing table
     * counts as empty: the first commit is `combine(empty, delta)`,
-    * range-partitioned on `keyCol` into `initialFiles` files so file
-    * key ranges are disjoint and a narrow later batch touches few
-    * files. Every later commit reads only the touched files' rows,
-    * combines them with the delta, re-range-partitions the result on
-    * the key so ranges STAY disjoint, and hard-links every other file
-    * unchanged. Prune logic is scale-shaped: the manifest (one key
+    * range-partitioned on `keyCol` into [[filesFor]] the delta files,
+    * at least `initialFiles`, so file key ranges are disjoint and a
+    * narrow later batch touches few files. Every later commit reads
+    * only the touched files' rows, combines them with the delta,
+    * re-range-partitions the result on the key so ranges STAY
+    * disjoint — into one file per target size of the touched bytes,
+    * at least as many as it touched — and hard-links every other file
+    * unchanged. Inside a registry micro-batch the merge runs at the
+    * width of the batch plus the touched files
+    * ([[graft.operators.Lineage.batchWidth]]). Prune logic is
+    * scale-shaped: the manifest (one key
     * range per data file) rides the delta-key scan as a literal and
     * each key is tested against it in the job that computes the keys —
     * the delta is never collected, and the only driver-side
@@ -1011,7 +1046,8 @@ class ResultStore(spark: SparkSession, root: String) {
       meta: Map[String, String] = Map.empty): PrunedCommit = {
     if (!exists0(schema)) {
       commit(schema, combine(delta.limit(0), delta, keyCol)
-        .repartitionByRange(initialFiles, col(keyCol)), meta, Some(keyCol))
+        .repartitionByRange(filesFor(delta, initialFiles), col(keyCol)),
+        meta, Some(keyCol))
       return PrunedCommit(rewrittenFiles = 0, carriedFiles = 0)
     }
     // one handle on the committed table: every schema/type/plan use
@@ -1078,15 +1114,11 @@ class ResultStore(spark: SparkSession, root: String) {
         // Delta/Iceberg file-sizing discipline). Without the split the
         // initial file count is frozen forever and a mature registry's
         // every batch degrades to a near-full rewrite.
-        val targetBytes = spark.conf
-          .getOption("spark.graft.store.targetFileBytes")
-          .map(_.toLong).getOrElse(128L << 20)
-        val outParts = math.max(
-          math.max(1, touchedFiles.length),
-          math.ceil(
-            touchedFiles.map(_.length()).sum.toDouble / targetBytes).toInt)
+        val outParts = filesFor(touchedFiles.map(_.length()).sum,
+          math.max(1, touchedFiles.length))
         val merged = combine(storedTouched, delta, keyCol)
           .repartitionByRange(outParts, col(keyCol))
+        graft.operators.Lineage.batchWidth(merged) {
         publish(schema, inherited(schema, meta)) { (version, dir) =>
           merged.write.mode(SaveMode.Overwrite).parquet(dir.getPath)
           // new files' stats BEFORE linking (the dir holds only them now)
@@ -1097,6 +1129,7 @@ class ResultStore(spark: SparkSession, root: String) {
               (name, lo, hi)
             }
           writeStatsRows(schema, version, keyCol, newStats ++ carriedStats)
+        }
         }
         PrunedCommit(rewrittenFiles = touchedFiles.length,
           carriedFiles = untouchedFiles.length)

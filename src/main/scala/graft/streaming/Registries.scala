@@ -46,6 +46,16 @@ import graft.operators.Lineage
   *    Delta/Iceberg merge-on-read + OPTIMIZE cycle. Amortized write
   *    cost per batch: O(batch + registry/compactEvery).
   *
+  * Layout is sized by bytes on both paths. Every write gets one file
+  * per `spark.graft.store.targetFileBytes`, and at least
+  * `registryPartitions` files (default 1). The first commit and each
+  * segment are sized by the batch's delta, a pruned rewrite by the
+  * files it touches, and a compaction by the whole registry. So a
+  * batch-sized commit writes one file, and a mature registry keeps
+  * target-size files. Each micro-batch runs in
+  * [[graft.operators.Lineage.microBatch]]'s window: AQE off, and
+  * shuffles sized by the bytes the commit reads.
+  *
   * Invariant (what makes it oracle-able): addition is associative and
   * commutative and every row contributes exactly once, so the merged
   * registry equals the one-shot batch aggregate of the whole corpus
@@ -109,7 +119,7 @@ object Registries {
       schema: String,
       streamId: String,
       checkpoint: String,
-      registryPartitions: Int = 8,
+      registryPartitions: Int = 1,
       onCommit: (String, graft.sources.PrunedCommit) => Unit = (_, _) => ())
       : org.apache.spark.sql.streaming.StreamingQuery =
     additivePruned(stream, store, schema, streamId, checkpoint,
@@ -151,7 +161,7 @@ object Registries {
       streamId: String,
       checkpoint: String,
       maxBucket: Long = 63L,
-      registryPartitions: Int = 8,
+      registryPartitions: Int = 1,
       onCommit: (String, graft.sources.PrunedCommit) => Unit = (_, _) => ())
       : org.apache.spark.sql.streaming.StreamingQuery = {
     require(width > 0.0, "bucket width must be positive")
@@ -191,7 +201,7 @@ object Registries {
       schema: String,
       streamId: String,
       checkpoint: String,
-      registryPartitions: Int = 8,
+      registryPartitions: Int = 1,
       onCommit: (String, RegistryCommit) => Unit = (_, _) => ())
       : org.apache.spark.sql.streaming.StreamingQuery =
     additiveSegmented(stream, store, schema, streamId, checkpoint,
@@ -221,7 +231,7 @@ object Registries {
       schema: String,
       streamId: String,
       checkpoint: String,
-      registryPartitions: Int = 8,
+      registryPartitions: Int = 1,
       onCommit: (String, RegistryCommit) => Unit = (_, _) => ())
       : org.apache.spark.sql.streaming.StreamingQuery =
     additiveSegmented(stream, store, schema, streamId, checkpoint,
@@ -327,10 +337,12 @@ object Registries {
         // segment rows) and the next compaction re-range-partitions
         // the merged base itself, so range layout here is bought with
         // a per-batch RangePartitioner SAMPLING job over the delta
-        // that no reader ever exploits. Hash keeps the same file
-        // count without the extra pass.
-        val delta = Lineage.cutLocal(deltaOf(batch))
-          .repartition(registryPartitions, col("key"))
+        // that no reader ever exploits. Hash sizes the segment by the
+        // delta's bytes (one file per target size, at least
+        // `registryPartitions`) without the extra pass.
+        val cut = Lineage.cutLocal(deltaOf(batch))
+        val delta = cut.repartition(
+          store.filesFor(cut, registryPartitions), col("key"))
         // missing SegmentsKey on an EXISTING schema means an
         // out-of-band commit (manual overwriteWithMeta, a pruned-path
         // writer) replaced the metadata and dropped the counter —
@@ -346,10 +358,12 @@ object Registries {
           // compaction commit: merge base + segments + this delta into
           // a fresh range-partitioned base WITH a key-range sidecar
           // (ad-hoc point reads prune again until the next segment
-          // lands). Registry-sized, amortized over compactEvery.
-          val merged = graft.sources.Combine.Additive(groupCols, statCols)(
-              store.read(schema), delta, "key")
-            .repartitionByRange(registryPartitions, col("key"))
+          // lands), one file per target size of the registry.
+          // Registry-sized, amortized over compactEvery.
+          val rolled = graft.sources.Combine.Additive(groupCols, statCols)(
+              store.read(schema), cut, "key")
+          val merged = rolled.repartitionByRange(
+            store.filesFor(rolled, registryPartitions), col("key"))
           store.overwriteWithStats(schema, merged, "key",
             txns + (SegmentsKey -> "0"))
           onCommit(schema, Compacted(segmentsRolled = segs))
@@ -362,10 +376,12 @@ object Registries {
     }
   }
 
-  /** Shared micro-batch frame: AQE off for the burst, replay guard
-    * via the per-stream `txn.` map (with the pre-r12 single-pair
-    * fallback and its upgrade-on-next-commit), then `commitDelta(
-    * batch, txnsMeta, committedMeta)` does the mode-specific write. */
+  /** Shared micro-batch frame: the batch's window
+    * ([[graft.operators.Lineage.microBatch]]: AQE off, shuffles sized
+    * by the batch's bytes), replay guard via the per-stream `txn.` map
+    * (with the pre-r12 single-pair fallback and its
+    * upgrade-on-next-commit), then `commitDelta(batch, txnsMeta,
+    * committedMeta)` does the mode-specific write. */
   private def additiveCore(
       stream: DataFrame,
       store: graft.sources.ResultStore,
@@ -379,9 +395,9 @@ object Registries {
       .option("checkpointLocation", checkpoint)
       .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        // batch-sized frames throughout: AQE off for the burst
-        // (Lineage.withoutAqe's measured rationale)
-        Lineage.withoutAqe(batch.sparkSession) {
+        // batch-sized frames throughout: AQE off and shuffles sized by
+        // the batch for the burst (Lineage.microBatch)
+        Lineage.microBatch(batch) {
         val meta = store.committedMeta(schema)
         // replay guard: the per-stream `txn.<id>` map, FALLING BACK to
         // the pre-r12 single (stream_id, batch_id) pair — a registry

@@ -152,9 +152,13 @@ object StreamRunner {
     *
     * Scale shape per batch: one predicate evaluation fused into the
     * batch scan (a `when`, not two filtered passes), one
-    * batch-footprint pruned commit keyed on `keyCol`. Only the first
-    * commit range-partitions, into `registryPartitions` files; a later
-    * one re-range-partitions just the rewritten rows. */
+    * batch-footprint pruned commit keyed on `keyCol`, with the
+    * batch's shuffles sized by its bytes
+    * ([[graft.operators.Lineage.microBatch]]). The first commit
+    * range-partitions the batch into one file per target size
+    * (`spark.graft.store.targetFileBytes`), at least
+    * `registryPartitions`; a later one re-range-partitions just the
+    * rewritten rows, splitting files that outgrew the target. */
   def quarantineStream(
       stream: DataFrame,
       violation: org.apache.spark.sql.Column,
@@ -162,12 +166,12 @@ object StreamRunner {
       store: graft.sources.ResultStore,
       schema: String,
       checkpoint: String,
-      registryPartitions: Int = 4): StreamingQuery =
+      registryPartitions: Int = 1): StreamingQuery =
     stream.writeStream
       .option("checkpointLocation", checkpoint)
       .trigger(Trigger.AvailableNow())
       .foreachBatch { (batch: DataFrame, _: Long) =>
-        graft.operators.Lineage.withoutAqe(batch.sparkSession) {
+        graft.operators.Lineage.microBatch(batch) {
           val bad = coalesce(violation, lit(true))
           val routed = graft.operators.Lineage.cutLocal(
             batch.withColumn(ArmCol,

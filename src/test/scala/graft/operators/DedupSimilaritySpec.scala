@@ -324,7 +324,7 @@ class DedupSimilaritySpec extends AnyFunSuite {
       .empty[graft.sources.PrunedCommit]
     graft.operators.Dedup.incrementalDedup(
       graft.streaming.StreamRunner.parquetStream(spark, s"$tmp/in", 1),
-      "doc_id", "text", store, "reg", s"$tmp/ckpt",
+      "doc_id", "text", store, "reg", s"$tmp/ckpt", registryPartitions = 8,
       onCommit = (_, c) => commits.synchronized { commits += c })
       .awaitTermination()
     assert(store.count("reg") == 74)
@@ -361,6 +361,7 @@ class DedupSimilaritySpec extends AnyFunSuite {
     graft.operators.Dedup.incrementalNearDup(
       graft.streaming.StreamRunner.parquetStream(spark, s"$tmp/in", 1),
       "doc_id", "text", store, "sigs", "pairs", s"$tmp/ckpt",
+      registryPartitions = 8,
       onPrunedRead = (o, t) => reads.synchronized { reads += ((o, t)) })
       .awaitTermination()
     // five post-seed batches, each a pruned point lookup

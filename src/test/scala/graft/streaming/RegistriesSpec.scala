@@ -377,6 +377,95 @@ class RegistriesSpec extends AnyFunSuite {
     } finally spark.conf.unset("spark.graft.registry.compactSegments")
   }
 
+  test("registry files are sized by their bytes: a compaction writes one " +
+      "file per target size, a large segment and an outgrown pruned " +
+      "rewrite split, and readouts stay exact") {
+    val target = 2048L
+    // batch b: 400 documents, each token used by a quarter of them and
+    // a few tokens new in this batch, so the vocabulary grows
+    val texts = (0 until 4).map(b => (0 until 400).map(d =>
+      (0 until 12).map(t => s"w${(d * 13 + t * 7) % 700}").mkString(" ") +
+        s" b${b}x${d % 40}"))
+    val tmp = java.nio.file.Files.createTempDirectory("graft-bytes").toString
+    val in = new java.io.File(s"$tmp/in"); in.mkdirs()
+    val batchBytes = texts.zipWithIndex.map { case (docs, b) =>
+      val stage = new java.io.File(s"$tmp/stage$b")
+      docs.zipWithIndex.map { case (t, d) => (b * 1000L + d, t) }
+        .toDF("doc_id", "text").coalesce(1)
+        .write.mode("overwrite").parquet(stage.getPath)
+      val part = stage.listFiles().find(f =>
+        f.getName.startsWith("part-") && f.getName.endsWith(".parquet")).get
+      val dst = new java.io.File(in, f"d$b%03d.parquet")
+      java.nio.file.Files.move(part.toPath, dst.toPath)
+      dst.setLastModified(1700000000000L + b * 60000L)
+      dst.length()
+    }
+    assert(batchBytes.forall(_ > 2 * target), batchBytes.toString)
+    def ceilDiv(a: Long) = (a + target - 1) / target
+    val store = new graft.sources.ResultStore(spark, s"$tmp/store")
+    def regBytes(schema: String) = store.read(schema).inputFiles
+      .map(f => new java.io.File(new java.net.URI(f)).length()).sum
+    val tokenCommits = scala.collection.mutable.ArrayBuffer
+      .empty[(Registries.RegistryCommit, Long, Int)]
+    val dedupFiles = scala.collection.mutable.ArrayBuffer.empty[Int]
+    spark.conf.set("spark.graft.store.targetFileBytes", target.toString)
+    spark.conf.set("spark.graft.registry.compactSegments", "2")
+    try {
+      // registry bytes before each commit, and its files after it
+      var before = 0L
+      Registries.incrementalTokenCounts(
+        StreamRunner.parquetStream(spark, s"$tmp/in", 1),
+        "text", store, "tok", "s1", s"$tmp/ckpt-tok",
+        onCommit = (_, c) => tokenCommits.synchronized {
+          tokenCommits += ((c, before, store.dataFileCount("tok")))
+          before = regBytes("tok")
+        })
+        .awaitTermination()
+      graft.operators.Dedup.incrementalDedup(
+        StreamRunner.parquetStream(spark, s"$tmp/in", 1),
+        "doc_id", "text", store, "reg", s"$tmp/ckpt-dedup",
+        onCommit = (_, _) => dedupFiles.synchronized {
+          dedupFiles += store.dataFileCount("reg")
+        })
+        .awaitTermination()
+    } finally {
+      spark.conf.unset("spark.graft.store.targetFileBytes")
+      spark.conf.unset("spark.graft.registry.compactSegments")
+    }
+    // seg, seg, cmp, seg at compactEvery = 2
+    assert(tokenCommits.map(_._1 match {
+      case _: Registries.SegmentAppended => "seg"
+      case _: Registries.Compacted => "cmp"
+    }) == Seq("seg", "seg", "cmp", "seg"), tokenCommits.toString)
+    tokenCommits.zipWithIndex.foreach {
+      // a segment is sized by its delta, which holds at most the batch's
+      // bytes: above the target it splits
+      case ((Registries.SegmentAppended(r), _, _), b) =>
+        assert(r.newFiles > 1 && r.newFiles <= ceilDiv(batchBytes(b)),
+          s"segment $b: $r, batch ${batchBytes(b)} B")
+      // a compaction reads the whole registry and the batch's delta:
+      // one file per target size of those bytes, not a fixed count
+      case ((Registries.Compacted(_), stored, files), b) =>
+        assert(files >= ceilDiv(stored) &&
+          files <= ceilDiv(stored + batchBytes(b)),
+          s"compaction: $files files from $stored B + batch ${batchBytes(b)} B")
+    }
+    // the pruned registry's rewrites split its files as it grows
+    assert(dedupFiles.length == 4 && dedupFiles.last > dedupFiles.head,
+      dedupFiles.toString)
+    // and both readouts equal the one-shot aggregates
+    val all = texts.flatten
+    val tokens = Registries.readTokenCounts(store, "tok").collect()
+      .map(r => r.getAs[String]("key") -> r.getAs[Long]("n")).toMap
+    assert(tokens == all.flatMap(_.split(" ")).groupBy(identity)
+      .map { case (k, v) => k -> v.size.toLong })
+    val firstIds = texts.zipWithIndex.flatMap { case (docs, b) =>
+      docs.zipWithIndex.map { case (t, d) => (t, b * 1000L + d) } }
+      .groupBy(_._1).map(_._2.map(_._2).min).toSet
+    assert(store.read("reg").collect().map(_.getAs[Long]("doc_id")).toSet ==
+      firstIds)
+  }
+
   test("incrementalBigramCounts: adjacent pairs equal the one-shot " +
       "aggregate for any batch split; components ride the key") {
     val rows = Seq(Tuple1("a b a"), Tuple1("b a"), Tuple1("solo"))
