@@ -709,9 +709,10 @@ object Dedup {
             TextFunctions.fingerprint(col(textCol)).as("fingerprint"))
           .groupBy("fingerprint").agg(min("doc_id").as("doc_id")))
         // the first commit lays the registry out in disjoint
-        // fingerprint ranges, one file per target size of the batch (at
-        // least `registryPartitions`), so later batches touch few files;
-        // rewritten files split as they outgrow the target size
+        // fingerprint ranges, sized by the batch's bytes (the store's
+        // layout rule, at least `registryPartitions` files), so later
+        // batches touch few files; rewritten files split as they
+        // outgrow the rule's size
         val stats = store.prunedMerge(schema, mins, "fingerprint",
           graft.sources.Combine.Min("doc_id"), registryPartitions)
         onCommit(schema, stats)

@@ -152,27 +152,28 @@ private[graft] object Lineage {
     widthFor(df.sparkSession, leafBytes(df))
 
   /** [[iterPartitions]]'s rule for a plan reading `bytes`: one shuffle
-    * partition per `spark.graft.iterPartitionBytes`, at least 1 and at
-    * most the session's width; unknown (non-positive) bytes plan at the
+    * partition per [[partitionBytes]], at least 1 and at most the
+    * session's width; unknown (non-positive) bytes plan at the
     * session's width. */
-  private def widthFor(
-      spark: org.apache.spark.sql.SparkSession, bytes: BigInt): Int = {
+  def widthFor(spark: org.apache.spark.sql.SparkSession, bytes: BigInt): Int = {
     val session = spark.conf.get("spark.sql.shuffle.partitions").toInt
-    // bytes per round partition: parameterised (dev A/B + cluster
-    // tuning), 4 MB default — measured at both failure ends in r16
-    // (64 MB serialized aq92's round work; the session's 32 paid 559
-    // near-empty tasks) and re-measured against 1/2 MB in r17 (aq44
-    // flat-to-worse: the per-round frames are latency-bound at this
-    // SF, more tasks buy nothing).
-    val per = spark.conf.getOption("spark.graft.iterPartitionBytes")
-      .map(_.toLong).getOrElse(4L << 20)
     if (bytes <= 0) session
-    else BigInt(session).min((bytes / per) + 1).toInt.max(1)
+    else BigInt(session).min((bytes / partitionBytes(spark)) + 1).toInt.max(1)
   }
+
+  /** Bytes per round partition, `spark.graft.iterPartitionBytes`. */
+  def partitionBytes(spark: org.apache.spark.sql.SparkSession): Long =
+    // parameterised (dev A/B + cluster tuning), 4 MB default — measured
+    // at both failure ends in r16 (64 MB serialized aq92's round work;
+    // the session's 32 paid 559 near-empty tasks) and re-measured
+    // against 1/2 MB in r17 (aq44 flat-to-worse: the per-round frames
+    // are latency-bound at this SF, more tasks buy nothing).
+    spark.conf.getOption("spark.graft.iterPartitionBytes")
+      .map(_.toLong).getOrElse(4L << 20)
 
   /** The plan's LEAF input bytes, the pre-execution statistic
     * [[iterPartitions]] sizes by. */
-  private def leafBytes(df: DataFrame): BigInt =
+  def leafBytes(df: DataFrame): BigInt =
     df.queryExecution.optimizedPlan.collectLeaves().map(_.stats.sizeInBytes).sum
 
   /** The part of [[leafBytes]] that is files on disk: the sizes of the
@@ -186,33 +187,24 @@ private[graft] object Lineage {
         l.stats.sizeInBytes
     }.sum
 
-  /** The part of [[leafBytes]] that is a plan estimate (lineage cuts,
-    * local relations). A cut reports its origin plan's estimate, which
-    * a join inflates to the product of its inputs; inside a
-    * [[microBatch]] window the frames derive from the batch, so the
-    * estimate counts at most the batch's bytes. */
-  def estimatedBytes(df: DataFrame): BigInt = {
-    val est = leafBytes(df) - fileBytes(df)
-    Option(batchBytes.get).fold(est)(est.min)
-  }
-
   /** Input bytes of the registry micro-batch whose window
-    * ([[microBatch]]) the current thread runs in, or null. Not
-    * inherited: a pool thread started inside a window must not keep its
-    * bytes. */
+    * ([[microBatch]]) the current thread runs in, if any. */
+  def windowBytes: Option[BigInt] = Option(batchBytes.get)
+
+  // not inherited: a pool thread started inside a window must not keep
+  // its bytes
   private val batchBytes = new ThreadLocal[BigInt]
 
   /** The window of one registry micro-batch: AQE off ([[withoutAqe]])
-    * and every shuffle sized by the bytes the batch reads, not by the
-    * session's core-wide width. Per-batch fixed cost is what a small
-    * micro-batch pays for (a 30 KB batch at the session's width ran
-    * about 150 near-empty tasks per round of three registries). The
-    * batch's own plans run on its session at [[iterPartitions]] width
-    * of `batch`; a store plan inside the window (a pruned merge, a
-    * compaction) runs on the store's session at the width of the
-    * batch's bytes plus the stored files it reads ([[batchWidth]]). A
-    * 30 KB batch plans at width 1; a batch above the session's width ×
-    * `spark.graft.iterPartitionBytes` keeps the session's width. */
+    * and the batch's own shuffles at [[iterPartitions]] width of
+    * `batch`, not at the session's core-wide width. Per-batch fixed
+    * cost is what a small micro-batch pays for (a 30 KB batch at the
+    * session's width ran about 150 near-empty tasks per round of three
+    * registries). A 30 KB batch plans at width 1; a batch above the
+    * session's width × [[partitionBytes]] keeps the session's width.
+    * The window's bytes ([[windowBytes]]) also size the store's plans
+    * and files inside it — the store's layout rule
+    * ([[graft.sources.ResultStore]], "Layout of a keyed write"). */
   def microBatch[T](batch: DataFrame)(body: => T): T = {
     val spark = batch.sparkSession
     val bytes = leafBytes(batch)
@@ -224,18 +216,6 @@ private[graft] object Lineage {
       }
     }
   }
-
-  /** Runs `body`, which executes `plan`, at the shuffle width of the
-    * enclosing [[microBatch]] window's bytes plus the stored files
-    * `plan` scans ([[fileBytes]]), pinned on `plan`'s session. Outside
-    * a window it runs `body` as it is. */
-  def batchWidth[T](plan: DataFrame)(body: => T): T =
-    Option(batchBytes.get) match {
-      case Some(b) =>
-        val spark = plan.sparkSession
-        withShufflePartitions(spark, widthFor(spark, b + fileBytes(plan)))(body)
-      case None => body
-    }
 
   /** Run `body` with `spark.sql.shuffle.partitions` pinned to `n`,
     * restoring the previous value afterwards. Same single-driver

@@ -975,39 +975,86 @@ class ResultStore(spark: SparkSession, root: String) {
     * read can prune immediately instead of paying one full rewrite to
     * re-establish the manifest. Write `df` range-partitioned on
     * `keyCol` so file ranges are disjoint, into [[filesFor]] files.
-    * Inside a registry micro-batch its shuffles run at the batch's
-    * width ([[graft.operators.Lineage.batchWidth]]). */
+    * Its shuffles run at [[windowWidth]]. */
   def overwriteWithStats(schema: String, df: DataFrame, keyCol: String,
       meta: Map[String, String] = Map.empty): Unit =
-    graft.operators.Lineage.batchWidth(df) {
+    windowWidth(df) {
       commit(schema, df, meta, statsKey = Some(keyCol))
     }
+
+  // ---- Layout of a keyed write --------------------------------------
+  // One rule sizes every keyed write that lays out a registry (the
+  // first and every later [[prunedMerge]] commit, a merge-on-read
+  // registry's segments and compactions), in files and in shuffle width.
+  //
+  // Bytes ([[writeBytes]]). A write reads the stored files its plan
+  // scans, counted in full, and other inputs (a batch's delta behind a
+  // lineage cut) by their plan estimate. A cut reports its origin
+  // plan's estimate, which a join inflates to the product of its
+  // inputs, so an estimate counts only up to the bytes of the registry
+  // micro-batch the write runs in ([[graft.operators.Lineage.microBatch]])
+  // and not at all outside one.
+  //
+  // Files ([[filesFor]]). A registry of R bytes is written in files of
+  //   min(targetFileBytes, max(iterPartitionBytes,
+  //                            R × iterPartitionBytes / targetFileBytes))
+  // (`spark.graft.store.targetFileBytes`, 128 MB, and
+  // `spark.graft.iterPartitionBytes`, 4 MB, by default), and at least
+  // the caller's floor. A file holds one shuffle partition's bytes until
+  // the registry holds targetFileBytes / iterPartitionBytes files (32),
+  // then grows with the registry up to targetFileBytes. So a
+  // batch-sized registry is one file, a growing one splits as its files
+  // pass 4 MB, a narrow batch rewrites a few MB of a registry of up to
+  // 128 MB, and a TB registry keeps 128 MB files.
+  //
+  // Width ([[windowWidth]]). Inside a micro-batch window a store plan
+  // runs at [[graft.operators.Lineage.widthFor]] of the batch's bytes
+  // plus the stored files it scans: one partition per 4 MB, capped at
+  // the session's width. Outside a window it runs at the session's
+  // width.
 
   private def targetFileBytes: Long = spark.conf
     .getOption("spark.graft.store.targetFileBytes")
     .map(_.toLong).getOrElse(128L << 20)
 
-  /** Data files for `bytes` of rows: one per
-    * `spark.graft.store.targetFileBytes` (128 MB default), and at least
-    * `floor`. */
-  private def filesFor(bytes: BigInt, floor: Int): Int =
-    ((bytes.max(0) + targetFileBytes - 1) / targetFileBytes).toInt.max(floor)
-
-  /** Data files for writing `df`, by the bytes it reads: the stored
-    * files it scans count in full, its other inputs (a batch's delta
-    * behind a lineage cut) by their plan estimate
-    * ([[graft.operators.Lineage.estimatedBytes]]), counted up to the
-    * session's shuffle width of target-size files — the cap
-    * [[graft.operators.Lineage.iterPartitions]] puts on an estimate.
-    * At least `floor` files. A batch-sized registry commit writes one
-    * file; a compaction writes one file per target size of the
-    * registry. */
-  private[graft] def filesFor(df: DataFrame, floor: Int): Int = {
-    val cap = BigInt(spark.conf.get("spark.sql.shuffle.partitions").toInt) *
-      targetFileBytes
-    filesFor(graft.operators.Lineage.fileBytes(df) +
-      graft.operators.Lineage.estimatedBytes(df).min(cap), floor)
+  /** Bytes `df` writes, by the layout rule: the stored files it scans
+    * in full, its other inputs by their plan estimate up to the
+    * enclosing micro-batch's bytes (none outside a window). */
+  private def writeBytes(df: DataFrame): BigInt = {
+    val files = graft.operators.Lineage.fileBytes(df)
+    val estimate = graft.operators.Lineage.leafBytes(df) - files
+    files + estimate.max(0).min(graft.operators.Lineage.windowBytes.getOrElse(0))
   }
+
+  /** Data files for `bytes` of rows of a registry of `registryBytes`,
+    * at least `floor`, by the layout rule. */
+  private def filesFor(bytes: BigInt, registryBytes: BigInt, floor: Int): Int = {
+    val per = graft.operators.Lineage.partitionBytes(spark)
+    val size = BigInt(targetFileBytes)
+      .min((registryBytes * per / targetFileBytes).max(per)).max(1)
+    ((bytes.max(0) + size - 1) / size).toInt.max(floor)
+  }
+
+  /** Data files for writing `df` as a whole registry (or a segment of
+    * it), at least `floor`, by the layout rule. */
+  private[graft] def filesFor(df: DataFrame, floor: Int): Int = {
+    val bytes = writeBytes(df)
+    filesFor(bytes, bytes, floor)
+  }
+
+  /** Runs `body`, which executes `plan`, at the layout rule's width:
+    * inside a micro-batch window, the width of the batch's bytes plus
+    * the stored files `plan` scans, pinned on `plan`'s session; outside
+    * one, as it is. */
+  private[graft] def windowWidth[T](plan: DataFrame)(body: => T): T =
+    graft.operators.Lineage.windowBytes match {
+      case Some(b) =>
+        val s = plan.sparkSession
+        graft.operators.Lineage.withShufflePartitions(s,
+          graft.operators.Lineage.widthFor(s,
+            b + graft.operators.Lineage.fileBytes(plan)))(body)
+      case None => body
+    }
 
   /** MERGE INTO with file pruning: folds `delta` into the table by
     * `combine` with the same atomicity as [[merge]] and a table-rewrite
@@ -1018,12 +1065,10 @@ class ResultStore(spark: SparkSession, root: String) {
     * narrow later batch touches few files. Every later commit reads
     * only the touched files' rows, combines them with the delta,
     * re-range-partitions the result on the key so ranges STAY
-    * disjoint — into one file per target size of the touched bytes,
-    * at least as many as it touched — and hard-links every other file
-    * unchanged. Inside a registry micro-batch the merge runs at the
-    * width of the batch plus the touched files
-    * ([[graft.operators.Lineage.batchWidth]]). Prune logic is
-    * scale-shaped: the manifest (one key
+    * disjoint — into [[filesFor]] the touched files' and the delta's
+    * bytes, at least as many files as it touched — and hard-links
+    * every other file unchanged; the merge runs at [[windowWidth]].
+    * Prune logic is scale-shaped: the manifest (one key
     * range per data file) rides the delta-key scan as a literal and
     * each key is tested against it in the job that computes the keys —
     * the delta is never collected, and the only driver-side
@@ -1045,9 +1090,9 @@ class ResultStore(spark: SparkSession, root: String) {
       initialFiles: Int = 1,
       meta: Map[String, String] = Map.empty): PrunedCommit = {
     if (!exists0(schema)) {
-      commit(schema, combine(delta.limit(0), delta, keyCol)
-        .repartitionByRange(filesFor(delta, initialFiles), col(keyCol)),
-        meta, Some(keyCol))
+      val first = combine(delta.limit(0), delta, keyCol)
+        .repartitionByRange(filesFor(delta, initialFiles), col(keyCol))
+      windowWidth(first)(commit(schema, first, meta, Some(keyCol)))
       return PrunedCommit(rewrittenFiles = 0, carriedFiles = 0)
     }
     // one handle on the committed table: every schema/type/plan use
@@ -1114,11 +1159,14 @@ class ResultStore(spark: SparkSession, root: String) {
         // Delta/Iceberg file-sizing discipline). Without the split the
         // initial file count is frozen forever and a mature registry's
         // every batch degrades to a near-full rewrite.
-        val outParts = filesFor(touchedFiles.map(_.length()).sum,
+        val deltaBytes = writeBytes(delta)
+        val outParts = filesFor(
+          touchedFiles.map(_.length()).sum + deltaBytes,
+          (touchedFiles ++ untouchedFiles).map(_.length()).sum + deltaBytes,
           math.max(1, touchedFiles.length))
         val merged = combine(storedTouched, delta, keyCol)
           .repartitionByRange(outParts, col(keyCol))
-        graft.operators.Lineage.batchWidth(merged) {
+        windowWidth(merged) {
         publish(schema, inherited(schema, meta)) { (version, dir) =>
           merged.write.mode(SaveMode.Overwrite).parquet(dir.getPath)
           // new files' stats BEFORE linking (the dir holds only them now)

@@ -46,13 +46,14 @@ import graft.operators.Lineage
   *    Delta/Iceberg merge-on-read + OPTIMIZE cycle. Amortized write
   *    cost per batch: O(batch + registry/compactEvery).
   *
-  * Layout is sized by bytes on both paths. Every write gets one file
-  * per `spark.graft.store.targetFileBytes`, and at least
-  * `registryPartitions` files (default 1). The first commit and each
-  * segment are sized by the batch's delta, a pruned rewrite by the
-  * files it touches, and a compaction by the whole registry. So a
-  * batch-sized commit writes one file, and a mature registry keeps
-  * target-size files. Each micro-batch runs in
+  * Layout is sized by bytes on both paths, by the store's one layout
+  * rule ([[graft.sources.ResultStore]], "Layout of a keyed write"),
+  * and at least `registryPartitions` files (default 1). The first
+  * commit and each segment are sized by the batch's delta, a pruned
+  * rewrite by the files it touches plus the delta, and a compaction by
+  * the whole registry. So a batch-sized registry is one file, one of
+  * tens of MB holds files of one shuffle partition's bytes (4 MB), and
+  * a large one target-size files. Each micro-batch runs in
   * [[graft.operators.Lineage.microBatch]]'s window: AQE off, and
   * shuffles sized by the bytes the commit reads.
   *
@@ -338,8 +339,8 @@ object Registries {
         // the merged base itself, so range layout here is bought with
         // a per-batch RangePartitioner SAMPLING job over the delta
         // that no reader ever exploits. Hash sizes the segment by the
-        // delta's bytes (one file per target size, at least
-        // `registryPartitions`) without the extra pass.
+        // delta's bytes (the store's layout rule, at least
+        // `registryPartitions` files) without the extra pass.
         val cut = Lineage.cutLocal(deltaOf(batch))
         val delta = cut.repartition(
           store.filesFor(cut, registryPartitions), col("key"))
@@ -358,7 +359,7 @@ object Registries {
           // compaction commit: merge base + segments + this delta into
           // a fresh range-partitioned base WITH a key-range sidecar
           // (ad-hoc point reads prune again until the next segment
-          // lands), one file per target size of the registry.
+          // lands), sized by the whole registry's bytes.
           // Registry-sized, amortized over compactEvery.
           val rolled = graft.sources.Combine.Additive(groupCols, statCols)(
               store.read(schema), cut, "key")

@@ -155,10 +155,10 @@ object StreamRunner {
     * batch-footprint pruned commit keyed on `keyCol`, with the
     * batch's shuffles sized by its bytes
     * ([[graft.operators.Lineage.microBatch]]). The first commit
-    * range-partitions the batch into one file per target size
-    * (`spark.graft.store.targetFileBytes`), at least
+    * range-partitions the batch into files sized by its bytes (the
+    * store's layout rule, [[graft.sources.ResultStore]]), at least
     * `registryPartitions`; a later one re-range-partitions just the
-    * rewritten rows, splitting files that outgrew the target. */
+    * rewritten rows, splitting files that outgrew the rule's size. */
   def quarantineStream(
       stream: DataFrame,
       violation: org.apache.spark.sql.Column,

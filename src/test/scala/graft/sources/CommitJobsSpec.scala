@@ -240,7 +240,7 @@ class CommitJobsSpec extends AnyFunSuite {
             // the store's merge plans run with AQE off on its session
             val stored = store.read("t")
             val storeWidth = graft.operators.Lineage.withoutAqe(spark) {
-              graft.operators.Lineage.batchWidth(stored) {
+              store.windowWidth(stored) {
                 stored.groupBy("v").count().rdd.getNumPartitions
               }
             }
@@ -258,7 +258,7 @@ class CommitJobsSpec extends AnyFunSuite {
       widths.toString)
     // outside a window a store plan keeps the session's width
     assert(graft.operators.Lineage.withoutAqe(spark) {
-      graft.operators.Lineage.batchWidth(store.read("t")) {
+      store.windowWidth(store.read("t")) {
         store.read("t").groupBy("v").count().rdd.getNumPartitions
       }
     } == session)

@@ -530,6 +530,46 @@ class SourcesSpec extends AnyFunSuite {
     } finally spark.conf.unset("spark.graft.store.targetFileBytes")
   }
 
+  test("a growing registry's files split at iterPartitionBytes below " +
+      "targetFileBytes, so a narrow batch rewrites few small files") {
+    // a registry of R bytes is laid out in files of min(target, max(per,
+    // R × per / target)): under target its files hold about one
+    // partition's bytes, where the target alone would keep it one file
+    // that every batch rewrites whole
+    val per = 4096L
+    spark.conf.set("spark.graft.store.targetFileBytes", (32 * per).toString)
+    spark.conf.set("spark.graft.iterPartitionBytes", per.toString)
+    try {
+      val root = tmpDir()
+      val store = new ResultStore(spark, root)
+      val keys = 1L to 8000L by 40L
+      store.prunedMerge("s", keys.map(k => KV(k, "v" + k)).toDF(), "k",
+        Combine.Replace())
+      assert(store.dataFileCount("s") == 1)
+      // 200 new keys across the whole range per batch: every file is
+      // touched, so each rewrite re-lays the registry out by its bytes
+      for (b <- 1 to 8)
+        store.prunedMerge("s", keys.map(k => KV(k + b, s"b$b-$k")).toDF(),
+          "k", Combine.Replace())
+      val dataDir = new java.io.File(s"$root/s/" + store.versions("s").last)
+      val files = Option(dataDir.listFiles()).getOrElse(Array.empty)
+        .filter(f => f.isFile && !f.getName.startsWith("_") &&
+          !f.getName.startsWith("."))
+      val bytes = files.map(_.length()).sum
+      assert(bytes < 32 * per, s"registry reached the target: $bytes B")
+      assert(files.length > 1 && files.length >= bytes / (2 * per),
+        s"${files.length} files for $bytes B")
+      // a single-key upsert rewrites O(1) files and carries the rest
+      val c = store.prunedMerge("s", Seq(KV(4001L, "X")).toDF(), "k",
+        Combine.Replace())
+      assert(c.rewrittenFiles <= 2 && c.carriedFiles >= files.length - 2,
+        c.toString)
+    } finally {
+      spark.conf.unset("spark.graft.store.targetFileBytes")
+      spark.conf.unset("spark.graft.iterPartitionBytes")
+    }
+  }
+
   test("pruned commits stay batch-sized while the registry grows") {
     // the quadratic-write trap: N incremental batches must not each
     // rewrite the whole registry. 32-file registry, 5-key batches →
